@@ -74,14 +74,20 @@ def _pages_from_args(spark, args):
 
 
 def _report_output(spark, clusters, output: str, t0: float, extra: dict | None = None) -> None:
-    """Write the clusters parquet, re-read it (what a consumer sees), and
-    print the one-line JSON report. One elapsed reading feeds both
-    ``seconds`` and ``docs_per_sec`` — two ``time.time()`` calls straddling
-    the count jobs made the two fields mutually inconsistent."""
-    clusters.write.mode("overwrite").parquet(output)
-    written = spark.read.parquet(output)
-    n_docs = written.count()
-    n_clusters = written.select("cluster_id").distinct().count()
+    """Write the clusters parquet and print the one-line JSON report, with
+    both counts observed by the write: ``cluster_id`` is the component's
+    minimum url, so each cluster has one row with ``url == cluster_id``.
+    One elapsed reading feeds both ``seconds`` and ``docs_per_sec``."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    observed = Observation()
+    clusters.observe(
+        observed,
+        F.count(F.lit(1)).alias("docs"),
+        F.count_if(F.col("url") == F.col("cluster_id")).alias("clusters"),
+    ).write.mode("overwrite").parquet(output)
+    n_docs, n_clusters = observed.get["docs"], observed.get["clusters"]
     elapsed = time.time() - t0
     record = {
         "docs": n_docs,
@@ -113,6 +119,16 @@ def _synth_params(args) -> dict | None:
         "synth_total": total,
         "synth_n_sites": synth.n_sites_for(total),
     }
+
+
+def _read_synth_meta(path: Path) -> dict:
+    try:
+        return json.loads(path.read_text())
+    except json.JSONDecodeError as e:
+        raise SystemExit(
+            f"{path} is not valid JSON ({e}): the store's corpus label is "
+            f"damaged — rebuild with `dedup` into a fresh --checkpoint-dir"
+        ) from None
 
 
 def cmd_dedup(args) -> None:
@@ -152,7 +168,7 @@ def cmd_dedup(args) -> None:
         docs_reused = store.is_committed("docs")
         if synth_params is not None:
             if synth_meta.exists():
-                have = json.loads(synth_meta.read_text())
+                have = _read_synth_meta(synth_meta)
                 if have != synth_params and docs_reused:
                     raise SystemExit(
                         f"dedup --synth-n: this store's committed corpus was "
@@ -182,8 +198,10 @@ def cmd_dedup(args) -> None:
     result = P.run_dedup(spark, pages, cfg, store)
     if record_synth:
         # run_dedup returned → the docs stage this label describes is
-        # committed (see the timing note above)
-        synth_meta.write_text(json.dumps(synth_params))
+        # committed (see the timing note above); tmp+rename as in the store
+        tmp = synth_meta.with_suffix(".tmp")
+        tmp.write_text(json.dumps(synth_params))
+        tmp.rename(synth_meta)
     _report_output(
         spark, result["clusters"], args.output, t0,
         extra={"config_fingerprint": cfg.fingerprint()},
@@ -252,7 +270,7 @@ def cmd_append(args) -> None:
                 "SYNTH.json) — appending a synthetic slice onto it would "
                 "mix corpora; rebuild with `dedup --synth-n --synth-total`"
             )
-        have = json.loads(synth_meta.read_text())
+        have = _read_synth_meta(synth_meta)
         if (
             have.get("synth_seed") != want["synth_seed"]
             or have.get("synth_n_sites") != want["synth_n_sites"]

@@ -4,10 +4,11 @@ The reference resumes by checking whether artifact files exist in cloud
 storage and skipping recompute on a hit (src/user_embedding_pipeline.py:196-219,
 src/firebase_storage_manager.py:173-202). The new engine generalizes that to
 per-stage *table* commits: every pipeline stage writes its output table plus a
-manifest recording row counts (total and per output partition), config
-fingerprint, and free-form metrics; a resumed run loads any stage whose
-manifest matches the current config fingerprint and recomputes only what is
-missing — the north rule's snapshot-checkpoint semantics.
+manifest recording row counts (total and per output file, taken from the
+write itself with no read-back), config fingerprint, and free-form metrics;
+a resumed run loads any stage whose manifest matches the current config
+fingerprint and recomputes only what is missing — the north rule's
+snapshot-checkpoint semantics.
 
 Storage backend: Iceberg would provide this natively via snapshot commits;
 the `iceberg-spark-runtime` jar is not available in this sandbox (SURVEY.md
@@ -22,10 +23,11 @@ from __future__ import annotations
 
 import json
 import shutil
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, replace
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -43,7 +45,7 @@ class StageManifest:
     # files (plain commits), or this is a segment-append manifest, whose
     # partition_rows carry only the NEW segment's files (prior segments'
     # lineage lives in the superseded manifests). row_count/file_count stay
-    # exact either way, computed executor-side.
+    # exact either way: the write observes the rows, the listing the files.
     partition_rows_truncated: bool = False
     # data directories (under root/<stage>/) whose union is the stage table;
     # ["data"] for a plain commit, ["data", "data-g1", …] after segment
@@ -55,13 +57,14 @@ class StageManifest:
 class StageStore:
     """Parquet + manifest-JSON stage store with atomic-commit semantics.
 
-    ``file_cap`` bounds the per-file lineage section of the manifest: a
-    100 TB stage writes 10⁵-10⁶ parquet files, and collecting one dict
-    entry per file would make the manifest (and the driver collect behind
-    it) grow with data size. Totals are aggregated executor-side and stay
-    exact at any file count; per-file rows are recorded for the first
-    ``file_cap`` files only, with ``partition_rows_truncated`` flagging the
-    cut — so the manifest is O(file_cap) bytes regardless of scale.
+    Lineage comes from the write, with no read-back: the write job
+    observes the exact row count, and per-file rows come from parquet
+    footers. ``file_cap`` bounds that per-file section: a 100 TB stage
+    writes 10⁵-10⁶ files, and one entry (and footer read) per file would
+    grow the manifest and the commit with data size. Only the first
+    ``file_cap`` files by name are recorded, with ``partition_rows_truncated``
+    flagging the cut. When they are all the files, their sum must equal the
+    observed count or the commit fails.
     """
 
     def __init__(
@@ -92,56 +95,56 @@ class StageStore:
     def _txn_path(self) -> Path:
         return self.root / "TXN.json"
 
-    # -- lineage -------------------------------------------------------------
-    def _lineage(self, spark: SparkSession, paths: list[str]):
-        """(row_count, file_count, capped partition_rows, schema_ddl) over
-        the given parquet dirs — exact totals aggregated executor-side (ONE
-        2-column row reaches the driver however many files exist), per-file
-        rows for the first ``file_cap`` files only."""
-        committed = spark.read.parquet(*paths)
-        # per_file is tiny (one row per file) — persist it so the totals
-        # aggregate and the capped head read the committed data ONCE
-        per_file = committed.groupBy(F.input_file_name().alias("file")).count().persist()
-        try:
-            totals = per_file.agg(
-                F.count(F.lit(1)).alias("n_files"), F.sum("count").alias("n_rows")
-            ).collect()[0]
-            file_count = int(totals["n_files"] or 0)
-            head = per_file.orderBy("file").limit(self.file_cap).collect()
-        finally:
-            per_file.unpersist()
-        partition_rows = {Path(r["file"]).name: r["count"] for r in head}
-        return (
-            int(totals["n_rows"] or 0),
-            file_count,
-            partition_rows,
-            committed.schema.simpleString(),
-        )
-
     # -- commit protocol ----------------------------------------------------
-    def commit(self, stage: str, df: DataFrame, metrics: dict | None = None) -> StageManifest:
-        """Write stage output + lineage manifest. The manifest write is last:
-        a stage directory without a manifest is an aborted commit and is
-        recomputed on resume (kill-and-resume test relies on this)."""
-        data_dir = self._data_dir(stage)
-        if data_dir.parent.exists():
-            shutil.rmtree(data_dir.parent)
-        df.write.mode("overwrite").parquet(str(data_dir))
-
-        row_count, file_count, partition_rows, schema_ddl = self._lineage(
-            df.sparkSession, [str(data_dir)]
-        )
-        manifest = StageManifest(
+    def _write(
+        self, stage: str, df: DataFrame, segment: str, metrics: dict | None
+    ) -> StageManifest:
+        """Write ``df`` as ``segment`` of ``stage``; build its manifest from
+        the write (see the class docstring). Spark writes a zero-row file
+        for an empty partition 0, the first file by name; it is not counted."""
+        out = self._segment_dir(stage, segment)
+        shutil.rmtree(out, ignore_errors=True)  # a crashed attempt's leftover
+        observed = Observation()
+        df.observe(observed, F.count(F.lit(1)).alias("rows")).write.parquet(str(out))
+        row_count = observed.get["rows"]
+        files = sorted(out.glob("part-*"))
+        partition_rows: dict[str, int] = {}
+        empty = 0
+        for f in files:
+            if len(partition_rows) == self.file_cap:
+                break
+            n = pq.read_metadata(f).num_rows
+            if n:
+                partition_rows[f.name] = n
+            else:
+                empty += 1
+        file_count = len(files) - empty
+        if file_count == len(partition_rows) and sum(partition_rows.values()) != row_count:
+            raise RuntimeError(
+                f"stage '{stage}': parquet footers under {out} hold "
+                f"{sum(partition_rows.values())} rows but the write observed "
+                f"{row_count}"
+            )
+        return StageManifest(
             stage=stage,
             config_fingerprint=self.config_fingerprint,
             row_count=row_count,
             partition_rows=partition_rows,
             metrics=metrics or {},
-            schema_ddl=schema_ddl,
+            schema_ddl=df.schema.simpleString(),
             file_count=file_count,
-            partition_rows_truncated=file_count > self.file_cap,
-            segments=["data"],
+            partition_rows_truncated=file_count > len(partition_rows),
+            segments=[segment],
         )
+
+    def commit(self, stage: str, df: DataFrame, metrics: dict | None = None) -> StageManifest:
+        """Write stage output + lineage manifest. The manifest write is last:
+        a stage directory without a manifest is an aborted commit and is
+        recomputed on resume (kill-and-resume test relies on this)."""
+        stage_dir = self.root / stage
+        if stage_dir.exists():
+            shutil.rmtree(stage_dir)
+        manifest = self._write(stage, df, "data", metrics)
         tmp = self._manifest_path(stage).with_suffix(".tmp")
         tmp.write_text(json.dumps(asdict(manifest), indent=2))
         tmp.rename(self._manifest_path(stage))  # atomic on POSIX
@@ -233,7 +236,7 @@ class StageTxn:
     * ``stage_segment`` — the Iceberg-append analog: the new segment holds
       ONLY the appended rows (O(new batch) I/O), the manifest's segment
       list grows by one, and ``load()`` reads the union. Totals stay exact
-      (prior manifest + executor-side count of the new segment).
+      (prior manifest + the count the new segment's write observed).
     """
 
     def __init__(self, store: StageStore, generation: int):
@@ -245,14 +248,6 @@ class StageTxn:
 
     def _segment_name(self) -> str:
         return f"data-g{self.generation}"
-
-    def _write_segment(self, stage: str, df: DataFrame) -> Path:
-        seg_dir = self.store._segment_dir(stage, self._segment_name())
-        seg_dir.parent.mkdir(parents=True, exist_ok=True)
-        if seg_dir.exists():  # leftover from a crashed earlier attempt
-            shutil.rmtree(seg_dir)
-        df.write.parquet(str(seg_dir))
-        return seg_dir
 
     def _stage_manifest(self, stage: str, manifest: StageManifest) -> None:
         staged = self.store._staged_manifest_path(stage)
@@ -266,59 +261,43 @@ class StageTxn:
         The old segments keep serving readers — and the plan computing
         ``df`` may itself read them — until the flip, then get GC'd."""
         seg = self._segment_name()
-        seg_dir = self._write_segment(stage, df)
-        row_count, file_count, partition_rows, schema_ddl = self.store._lineage(
-            df.sparkSession, [str(seg_dir)]
-        )
-        old_segments: list[str] = []
         if self.store._manifest_path(stage).exists():
-            old_segments = [
+            self._gc[stage] = [
                 s for s in (self.store.manifest(stage).segments or ["data"])
                 if s != seg
             ]
-        self._stage_manifest(stage, StageManifest(
-            stage=stage,
-            config_fingerprint=self.store.config_fingerprint,
-            row_count=row_count,
-            partition_rows=partition_rows,
-            metrics=metrics or {},
-            schema_ddl=schema_ddl,
-            file_count=file_count,
-            partition_rows_truncated=file_count > self.store.file_cap,
-            segments=[seg],
-        ))
-        if old_segments:
-            self._gc[stage] = old_segments
+        self._stage_manifest(stage, self.store._write(stage, df, seg, metrics))
 
     def stage_segment(self, stage: str, df: DataFrame, metrics: dict | None = None) -> None:
         """Append ``df`` as a new segment of ``stage`` (staged until commit)
         — writes ONLY the new rows; the committed stage becomes the union
-        of its segments."""
+        of its segments. A segment whose schema differs from the committed
+        one is refused before anything is written: parquet reads of the
+        segment union do not merge schemas."""
         if not self.store._manifest_path(stage).exists():
             raise ValueError(
                 f"stage_segment('{stage}'): no committed base manifest to "
                 f"append to — use stage_full for the first write"
             )
         prior = self.store.manifest(stage)
+        schema_ddl = df.schema.simpleString()
+        if prior.schema_ddl and schema_ddl != prior.schema_ddl:
+            raise ValueError(
+                f"stage_segment('{stage}'): the new segment's schema "
+                f"{schema_ddl} differs from the committed {prior.schema_ddl} "
+                f"— rebuild with `dedup` into a fresh --checkpoint-dir"
+            )
         seg = self._segment_name()
-        seg_dir = self._write_segment(stage, df)
-        row_count, file_count, partition_rows, schema_ddl = self.store._lineage(
-            df.sparkSession, [str(seg_dir)]
-        )
-        segments = [s for s in (prior.segments or ["data"]) if s != seg] + [seg]
-        total_files = prior.file_count + file_count
-        self._stage_manifest(stage, StageManifest(
-            stage=stage,
-            config_fingerprint=self.store.config_fingerprint,
-            row_count=prior.row_count + row_count,
+        new = self.store._write(stage, df, seg, metrics)
+        total_files = prior.file_count + new.file_count
+        self._stage_manifest(stage, replace(
+            new,
+            row_count=prior.row_count + new.row_count,
             # per-file lineage of the NEW segment (prior segments' lineage
             # lives in the superseded manifests' history; totals are exact)
-            partition_rows=partition_rows,
-            metrics=metrics or {},
-            schema_ddl=schema_ddl or prior.schema_ddl,
             file_count=total_files,
-            partition_rows_truncated=total_files > len(partition_rows),
-            segments=segments,
+            partition_rows_truncated=total_files > len(new.partition_rows),
+            segments=[s for s in (prior.segments or ["data"]) if s != seg] + [seg],
         ))
 
     def invalidate(self, stage: str) -> None:

@@ -1,19 +1,22 @@
 #!/usr/bin/env bash
 # Package the engine for spark-submit --py-files deployment.
-# Usage: scripts/make_pyfiles.sh  →  dist/jdt_spark.zip
+# Usage: scripts/make_pyfiles.sh [OUT]  →  OUT (default dist/jdt_spark.zip)
 set -euo pipefail
-cd "$(dirname "$0")/.."
-mkdir -p dist
-rm -f dist/jdt_spark.zip
-python - <<'EOF'
+repo="$(cd "$(dirname "$0")/.." && pwd)"
+out="$(realpath -m "${1:-$repo/dist/jdt_spark.zip}")"
+cd "$repo"
+mkdir -p "$(dirname "$out")"
+rm -f "$out"
+python - "$out" <<'EOF'
+import sys
 import zipfile
 from pathlib import Path
 
 root = Path("jira_duplicate_detection_turkcell__spark")
-with zipfile.ZipFile("dist/jdt_spark.zip", "w", zipfile.ZIP_DEFLATED) as z:
+with zipfile.ZipFile(sys.argv[1], "w", zipfile.ZIP_DEFLATED) as z:
     for py in sorted(root.rglob("*.py")):
         z.write(py, py.as_posix())
-print("wrote dist/jdt_spark.zip")
+print(f"wrote {sys.argv[1]}")
 EOF
 cat <<'EOF'
 Deploy example (multi-executor cluster):

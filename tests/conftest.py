@@ -12,11 +12,29 @@ if str(REPO_ROOT) not in sys.path:
     sys.path.insert(0, str(REPO_ROOT))
 
 
+def host_sized_conf() -> dict[str, str]:
+    """Driver heap and off-heap memory sized to this host's RAM: a quarter
+    and an eighth of MemTotal, capped at the engine defaults (24g + 16g).
+    The defaults suit the large hosts the engine is tuned on; a test JVM
+    that keeps them on a small host grows past physical memory and is
+    OOM-killed mid-suite. Hosts without /proc/meminfo keep the defaults."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return {}
+    total_mb = total_kb // 1024
+    return {
+        "spark.driver.memory": f"{min(24 * 1024, total_mb // 4)}m",
+        "spark.memory.offHeap.size": f"{min(16 * 1024, total_mb // 8)}m",
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     from jira_duplicate_detection_turkcell__spark.session import get_spark
 
-    spark = get_spark("pytest", shuffle_partitions=8)
+    spark = get_spark("pytest", shuffle_partitions=8, extra_conf=host_sized_conf())
     yield spark
     # session is shared across all tests; pytest exit tears down the JVM.
 

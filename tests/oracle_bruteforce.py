@@ -97,3 +97,33 @@ def cluster_pairs(assign: dict[str, str]) -> set[tuple[str, str]]:
 
 def pair_recall(found: set[tuple[str, str]], truth: set[tuple[str, str]]) -> float:
     return 1.0 if not truth else len(found & truth) / len(truth)
+
+
+def rescan_per_file_rows(spark, dirs: list[str]) -> tuple[dict[str, int], str]:
+    """Rows per written parquet file, by reading the data back and grouping
+    on ``input_file_name()`` — the rescan a stage manifest's lineage must
+    agree with. Zero-row files never appear. Also returns the schema as
+    read back."""
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(*dirs)
+    per_file = df.groupBy(F.input_file_name().alias("file")).count().collect()
+    return {Path(r["file"]).name: r["count"] for r in per_file}, df.schema.simpleString()
+
+
+def assert_manifest_matches_rescan(spark, store, stage: str) -> None:
+    """A committed manifest's lineage equals the rescan oracle: totals over
+    every segment, per-file rows for the newest segment's first
+    ``file_cap`` files by name, and the read-back schema."""
+    m = store.manifest(stage)
+    dirs = [str(store._segment_dir(stage, s)) for s in m.segments]
+    every, schema = rescan_per_file_rows(spark, dirs)
+    newest = rescan_per_file_rows(spark, dirs[-1:])[0] if len(dirs) > 1 else every
+    head = dict(sorted(newest.items())[: store.file_cap])
+    assert m.row_count == sum(every.values()), stage
+    assert m.file_count == len(every), stage
+    assert m.partition_rows == head, stage
+    assert m.partition_rows_truncated == (len(every) > len(head)), stage
+    assert m.schema_ddl == schema, stage

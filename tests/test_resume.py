@@ -7,6 +7,7 @@ import pytest
 from jira_duplicate_detection_turkcell__spark import synth
 from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
 from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
+from tests.oracle_bruteforce import assert_manifest_matches_rescan
 
 CFG = P.DedupConfig(minhash_bucket_cap=10_000, simhash_bucket_cap=10_000)
 
@@ -27,8 +28,7 @@ def test_full_run_commits_all_stages(spark, pages, tmp_path_factory):
     baseline = _assignments(result)
     for stage in ["docs", "signatures", "edges_minhash", "edges_simhash", "clusters"]:
         assert store.is_committed(stage), stage
-        m = store.manifest(stage)
-        assert m.row_count == sum(m.partition_rows.values())
+        assert_manifest_matches_rescan(spark, store, stage)
 
     # resume with everything committed → identical output, no recompute
     again = P.run_dedup(spark, pages, CFG, StageStore(root))
@@ -76,6 +76,20 @@ def test_manifest_lineage_metrics(spark, pages, tmp_path_factory):
     assert docs_manifest.schema_ddl.startswith("struct<")
 
 
+def test_commit_lineage_of_empty_and_partly_empty_outputs(spark, tmp_path):
+    """Spark writes one zero-row file for an empty output, and also for an
+    empty partition 0 beside row-bearing ones; neither counts as a file."""
+    store = StageStore(tmp_path / "st")
+    m = store.commit("empty", spark.range(0).selectExpr("id", "id * 2 AS v"))
+    assert (m.row_count, m.file_count, m.partition_rows) == (0, 0, {})
+    assert not m.partition_rows_truncated
+    assert_manifest_matches_rescan(spark, store, "empty")
+    # partition 0 holds ids 0-24, all filtered out
+    m = store.commit("head_empty", spark.range(0, 100, 1, 4).where("id >= 30"))
+    assert (m.row_count, m.file_count) == (70, 3)
+    assert_manifest_matches_rescan(spark, store, "head_empty")
+
+
 def test_manifest_bounded_at_many_files(spark, tmp_path_factory):
     """10⁴-file commit: per-file lineage is capped (file_cap entries), the
     manifest stays small, and totals remain exact — the 100 TB posture for
@@ -94,6 +108,7 @@ def test_manifest_bounded_at_many_files(spark, tmp_path_factory):
     assert len(m.partition_rows) == 256
     manifest_bytes = (root / "wide" / "MANIFEST.json").stat().st_size
     assert manifest_bytes < 1_000_000
+    assert_manifest_matches_rescan(spark, store, "wide")
     # reload path unaffected
     assert store.load(spark, "wide").count() == n_files * 3
 

@@ -370,12 +370,19 @@ def test_cli_dedup_in_process(spark, tmp_path):
     assert set(result.columns) == {"url", "cluster_id"}
 
 
-def test_cli_append_in_process(spark, tmp_path):
+def _assert_record_counts_output(spark, capsys, output) -> None:
+    """The CLI's JSON line reports the counts of the output it wrote."""
+    record = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    written = spark.read.parquet(str(output))
+    assert record["docs"] == written.count()
+    assert record["clusters"] == written.select("cluster_id").distinct().count()
+    assert record["dup_docs"] == record["docs"] - record["clusters"]
+
+
+def test_cli_append_in_process(spark, tmp_path, capsys):
     """dedup batch 1 (checkpointed) → append batch 2 → clusters must equal
     one full dedup over the whole corpus, with every edge kind enabled and
     the state committed at generation 1 (chainable)."""
-    import json as _json
-
     from jira_duplicate_detection_turkcell__spark import cli
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
 
@@ -385,10 +392,12 @@ def test_cli_append_in_process(spark, tmp_path):
         ["dedup", "--synth-n", "64", "--synth-total", "96",
          "--output", str(tmp_path / "c1"), "--checkpoint-dir", str(ckpt), *common]
     )
+    _assert_record_counts_output(spark, capsys, tmp_path / "c1")
     cli.main(
         ["append", "--synth-n", "32", "--synth-start", "64", "--synth-total", "96",
          "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt), *common]
     )
+    _assert_record_counts_output(spark, capsys, tmp_path / "c2")
     cli.main(
         ["dedup", "--synth-n", "96", "--output", str(tmp_path / "cfull"), *common]
     )
@@ -435,11 +444,11 @@ def test_cli_append_refuses_missing_state(spark, tmp_path):
 
 def test_pyfiles_zip_builds_and_imports(tmp_path):
     repo = Path(__file__).resolve().parent.parent
+    zip_path = tmp_path / "jdt_spark.zip"
     subprocess.run(
-        ["bash", str(repo / "scripts" / "make_pyfiles.sh")], check=True, cwd=repo,
-        capture_output=True,
+        ["bash", str(repo / "scripts" / "make_pyfiles.sh"), str(zip_path)],
+        check=True, cwd=tmp_path, capture_output=True,
     )
-    zip_path = repo / "dist" / "jdt_spark.zip"
     assert zip_path.exists()
     # the zip must be importable standalone (zipimport), as --py-files requires
     code = (

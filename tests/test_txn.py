@@ -21,6 +21,7 @@ from jira_duplicate_detection_turkcell__spark.sources.checkpoint import (
     StageStore,
     StageTxn,
 )
+from tests.oracle_bruteforce import assert_manifest_matches_rescan
 
 CFG = P.DedupConfig(minhash_bucket_cap=10_000, simhash_bucket_cap=10_000)
 
@@ -38,6 +39,7 @@ def test_segment_append_union_and_exact_totals(spark, tmp_path):
     m = store.manifest("t")
     assert m.segments == ["data", "data-g1"]
     assert m.row_count == 130
+    assert_manifest_matches_rescan(spark, store, "t")
     got = {r["id"] for r in store.load(spark, "t").collect()}
     assert got == set(range(130))
     # chain a second segment
@@ -46,6 +48,14 @@ def test_segment_append_union_and_exact_totals(spark, tmp_path):
     txn2.commit()
     assert store.manifest("t").row_count == 131
     assert store.load(spark, "t").count() == 131
+    assert_manifest_matches_rescan(spark, store, "t")
+    # an empty segment adds no rows and no files
+    txn3 = store.begin_txn(3)
+    txn3.stage_segment("t", _range_df(spark, 0, 0))
+    txn3.commit()
+    m3 = store.manifest("t")
+    assert (m3.row_count, m3.partition_rows) == (131, {})
+    assert_manifest_matches_rescan(spark, store, "t")
     assert not store._txn_path().exists()
 
 
@@ -62,8 +72,23 @@ def test_stage_full_gcs_old_segments_only_after_flip(spark, tmp_path):
     m = store.manifest("t")
     assert m.segments == ["data-g2"]
     assert m.row_count == 5
+    assert_manifest_matches_rescan(spark, store, "t")
     assert not (tmp_path / "st" / "t" / "data").exists()
     assert not (tmp_path / "st" / "t" / "data-g1").exists()
+
+
+def test_stage_segment_refuses_schema_drift(spark, tmp_path):
+    """A segment whose columns differ from the committed stage is refused
+    before anything is written: the segment union is read without schema
+    merging, so a drifted segment would corrupt the stage table."""
+    store = StageStore(tmp_path / "st")
+    store.commit("t", _range_df(spark, 0, 10))
+    txn = store.begin_txn(1)
+    drifted = _range_df(spark, 10, 20).selectExpr("*", "id AS extra")
+    with pytest.raises(ValueError, match=r"stage_segment\('t'\).*extra.*fresh"):
+        txn.stage_segment("t", drifted)
+    assert not (tmp_path / "st" / "t" / "data-g1").exists()
+    assert store.manifest("t").segments == ["data"]
 
 
 def test_crash_before_intent_leaves_base_generation_usable(spark, tmp_path):
@@ -242,6 +267,16 @@ def test_cli_append_refuses_synth_param_mismatch(tmp_path):
              "--synth-total", "96",
              "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt)]
         )
+    # a truncated label (crash mid-write) is refused with the rebuild hint
+    (ckpt / "SYNTH.json").write_text('{"synth_seed": 42, "synth_to')
+    for argv in (
+        ["append", "--synth-n", "32", "--synth-start", "64", "--synth-total", "96",
+         "--output", str(tmp_path / "c2"), "--state-dir", str(ckpt)],
+        ["dedup", "--synth-n", "64", "--synth-total", "96",
+         "--output", str(tmp_path / "c2"), "--checkpoint-dir", str(ckpt)],
+    ):
+        with pytest.raises(SystemExit, match="not valid JSON.*fresh --checkpoint-dir"):
+            cli.main(argv)
     # and a base with NO recorded params (pre-round-5 store / --input base)
     (ckpt / "SYNTH.json").unlink()
     with pytest.raises(SystemExit, match="recorded no synth params"):
