@@ -6,7 +6,8 @@ Builds a checkpointed base run of ``--base-n`` synthetic pages, then runs
   append   — ``--append-n`` new pages onto a fresh COPY of the base state
              (a copy because an append mutates the store; each trial must
              start from the same generation), via the CLI `append`
-             subcommand under spark-submit — the deployment shape;
+             subcommand under spark-submit with the engine conf of
+             ``session.submit_args`` — the deployment shape;
   rebuild  — one full `dedup` over all base+append pages (in-memory mode:
              no checkpoint commits, which UNDERSTATES the rebuild cost the
              append actually displaces — conservative in our favor's
@@ -32,28 +33,19 @@ import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 SPARK_SUBMIT = "/opt/spark/bin/spark-submit"
 
 
 def submit(cores: int, cli_args: list[str]) -> dict:
-    # the CLI deliberately uses the plain builder (the deployment shape);
-    # a real cluster passes sizing/tuning via spark-submit --conf exactly
-    # like this (values mirror session.py — the measured engine config;
-    # the 1 GB driver default OOMs at n=800k)
+    from jira_duplicate_detection_turkcell__spark import session
+
+    # the deployment shape: spark-submit with the engine conf from
+    # session.submit_args (the 24g driver heap it sizes is needed — the 1 GB
+    # spark-submit default OOMs at n=800k)
     cmd = [
         SPARK_SUBMIT,
-        "--master", f"local[{cores}]",
-        "--driver-memory", "24g",
-        "--conf", f"spark.sql.shuffle.partitions={cores * 4}",
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.adaptive.advisoryPartitionSizeInBytes=16MB",
-        "--conf", "spark.sql.join.preferSortMergeJoin=false",
-        "--conf", "spark.memory.offHeap.enabled=true",
-        "--conf", "spark.memory.offHeap.size=16g",
-        "--conf", "spark.driver.extraJavaOptions=-XX:+UseParallelGC -XX:NewRatio=1",
-        "--conf", f"spark.sql.files.maxPartitionBytes={32 * 1024 * 1024}",
-        "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
-        "--py-files", str(REPO / "dist" / "jdt_spark.zip"),
+        *session.submit_args(cores, str(REPO / "dist" / "jdt_spark.zip")),
         str(REPO / "jira_duplicate_detection_turkcell__spark" / "cli.py"),
         *cli_args,
     ]

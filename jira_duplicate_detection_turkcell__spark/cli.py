@@ -15,10 +15,15 @@ Deployment shape per BASELINE.md: ``spark-submit --py-files pkg.zip cli.py …``
              — so appends chain, and append ≡ full rebuild (the reference's
              consistency model, api_server.py:848-877, at incremental cost).
 
-Example:
-  spark-submit --master local[32] --py-files dist/jdt_spark.zip \\
-      -- cli.py dedup --synth-n 100000 --output /tmp/clusters \\
-      --checkpoint-dir /tmp/ckpt
+Both subcommands run on the session they were launched with and apply the
+engine's runtime SQL tuning the launch left unset (``session.attach``); the
+JSON line's ``conf_diff`` names every engine tuning key that did not hold.
+Launch with ``session.submit_args`` so that it is ``{}`` (run from the repo
+root after scripts/make_pyfiles.sh):
+
+  mapfile -t ARGS < <(python -c 'from jira_duplicate_detection_turkcell__spark import session; print(*session.submit_args(32, "dist/jdt_spark.zip"), sep="\\n")')
+  spark-submit "${ARGS[@]}" jira_duplicate_detection_turkcell__spark/cli.py \\
+      dedup --synth-n 100000 --output /tmp/clusters --checkpoint-dir /tmp/ckpt
 """
 
 from __future__ import annotations
@@ -81,6 +86,8 @@ def _report_output(spark, clusters, output: str, t0: float, extra: dict | None =
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from jira_duplicate_detection_turkcell__spark import session
+
     observed = Observation()
     clusters.observe(
         observed,
@@ -93,6 +100,7 @@ def _report_output(spark, clusters, output: str, t0: float, extra: dict | None =
         "docs": n_docs,
         "clusters": n_clusters,
         "dup_docs": n_docs - n_clusters,
+        "conf_diff": session.conf_diff(spark),
         **(extra or {}),
         "seconds": round(elapsed, 2),
         "docs_per_sec": round(n_docs / elapsed, 1) if elapsed > 0 else None,
@@ -132,13 +140,11 @@ def _read_synth_meta(path: Path) -> dict:
 
 
 def cmd_dedup(args) -> None:
-    from pyspark.sql import SparkSession
-
+    from jira_duplicate_detection_turkcell__spark import session
     from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
 
-    # under spark-submit the session is pre-configured; builder just attaches
-    spark = SparkSession.builder.getOrCreate()
+    spark = session.attach()
 
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
@@ -224,13 +230,12 @@ def cmd_append(args) -> None:
     longer be produced by this path. An Iceberg backend would replace this
     with real snapshot commits (SURVEY.md §7.5); the interface is the same.
     """
-    from pyspark.sql import SparkSession
-
+    from jira_duplicate_detection_turkcell__spark import session
     from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
     from jira_duplicate_detection_turkcell__spark.streaming import incremental
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = session.attach()
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
     store = StageStore(args.state_dir, config_fingerprint=cfg.fingerprint())

@@ -15,9 +15,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
-import sys
-import time
 from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -397,15 +394,7 @@ def run_dedup(
     if store is not None:
         store.config_fingerprint = cfg.fingerprint()
 
-    verbose = bool(os.environ.get("SPARK_GRAFT_TIMING"))
     stage_counts: dict[str, int] = {}
-
-    def clocked(name: str, fn):
-        t0 = time.time()
-        out = fn()
-        if verbose:
-            print(f"[pipeline] {name}: {time.time() - t0:.2f}s", file=sys.stderr, flush=True)
-        return out
 
     def stage(name: str, build, metrics: dict | None = None) -> DataFrame:
         if store is None:
@@ -415,7 +404,7 @@ def run_dedup(
             # keeps the columnar cache format — profiling showed localCheckpoint
             # row-serialization dominated the whole pipeline on wide stages.
             df = build().persist()
-            stage_counts[name] = clocked(name, df.count)
+            stage_counts[name] = df.count()
             return df
         if store.is_committed(name):
             return store.load(spark, name)
@@ -532,17 +521,14 @@ def run_dedup(
     edges = stage("edges", lambda: edges_plan)
     release_temps()  # edge stage persisted+counted → grouping pins are dead
 
-    clusters = clocked(
-        "connected_components",
-        lambda: connected_components(
-            edges,
-            nodes,
-            "url",
-            nodes_unique=True,
-            # the edge stage above persisted + counted the distinct l<r list —
-            # hand the count over so the hybrid gate runs zero extra jobs
-            edges_unique=True,
-            edge_count=stage_counts["edges"],
-        ),
+    clusters = connected_components(
+        edges,
+        nodes,
+        "url",
+        nodes_unique=True,
+        # the edge stage above persisted + counted the distinct l<r list —
+        # hand the count over so the hybrid gate runs zero extra jobs
+        edges_unique=True,
+        edge_count=stage_counts["edges"],
     )
     return {"docs": docs, "signatures": signed, "edges": edges, "clusters": clusters}

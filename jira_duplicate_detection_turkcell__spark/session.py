@@ -1,11 +1,13 @@
-"""SparkSession factory tuned for the dedup engine.
+"""The engine's SparkSession conf; the one place that knows it.
 
-Single place that owns the session config so tests, bench, the CLI and the
-driver contract (`__spark_entry__.py`) all run the same engine settings:
-Arrow-backed pandas UDF transfer, AQE (with skew-join handling — LSH hot
-buckets are the canonical skew source, SURVEY.md §4), and a shuffle
-partition count sized for the sandbox (`local[N]`) while remaining the knob
-a real cluster deployment would raise to O(input partitions).
+``TUNING_CONF`` (Arrow UDF transfer, AQE + skew join — LSH hot buckets are
+the canonical skew source, SURVEY.md §4 — shuffled-hash joins, the warm
+worker daemon, worker malloc tuning) must hold wherever the engine runs.
+Sizing (shuffle partitions, parallelism, driver heap, off-heap) is the
+deployment's choice. ``engine_conf`` returns both; ``get_spark`` (tests,
+bench, ``__spark_entry__.py``) and ``submit_args`` (spark-submit) launch
+it, and the CLI joins its launch through ``attach`` and reports tuning
+that did not hold through ``conf_diff``.
 """
 
 from __future__ import annotations
@@ -14,10 +16,30 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[32], 128 GiB). On a real cluster
-# these are overridden via spark-submit --conf; nothing below hard-codes
-# single-node assumptions.
-_BASE_CONF: dict[str, str] = {
+# glibc malloc tuning for the Python UDF workers (forked from the JVM, so
+# they inherit the driver process env in local mode; spark.executorEnv.*
+# covers cluster executors). Without this, numpy/Arrow batch temporaries a
+# few MB and up are mmap'd and munmap'd once per batch; under lazy host
+# paging each round-trip re-faults every page (~4µs each) and the workers
+# spend ~10× more time in the kernel than in user code (measured: 300 × 32 MB
+# alloc+touch = 9.1 s churning vs 0.15 s with these settings). Keeping freed
+# blocks on the arena (no trim, no mmap for ordinary sizes) makes worker
+# memory steady-state after the first batches.
+_MALLOC_ENV: dict[str, str] = {
+    "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
+    "MALLOC_TRIM_THRESHOLD_": "-1",
+    # CPython's pymalloc maps/unmaps 256 KiB object arenas constantly under
+    # string churn (tokenize/regex produce millions of short-lived strings);
+    # routing object allocation through the tuned glibc malloc keeps those
+    # pages resident too. Measured: signature stage 28.6→12.5 s cold and
+    # 8.3→6.0 s warm at 8 cores on the 20k-page corpus.
+    "PYTHONMALLOC": "malloc",
+}
+
+
+# Tuned on the sandbox (local[32], 128 GiB); nothing below hard-codes
+# single-node assumptions, and a launch --conf still overrides any key.
+TUNING_CONF: dict[str, str] = {
     # Arrow transfer for pandas UDFs / mapInPandas — the only Python that
     # ever touches row data runs vectorized over Arrow batches.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -67,11 +89,9 @@ _BASE_CONF: dict[str, str] = {
     # steal) vs 2-6 s with off-heap, and total task-time stabilized at
     # ~465 s where on-heap swung 457-720 s. local[2] is unaffected (GC was
     # already ~5 s), so this is pure high-parallelism headroom — the
-    # standard production posture for shuffle-heavy stages. 16 GB is the
-    # sandbox ceiling share (24 g heap + 16 g off-heap ≪ 128 GiB); a real
-    # cluster sizes it per executor via --conf.
+    # standard production posture for shuffle-heavy stages. Its size is
+    # sizing (engine_conf).
     "spark.memory.offHeap.enabled": "true",
-    "spark.memory.offHeap.size": "16g",
     # Shuffled-hash over sort-merge for equi-joins. The dominant stage of
     # the fused pair join is the bucket-table self-join; its SMJ sorts
     # (3-part key × 34M rows/side at n=800k) were the single biggest CPU
@@ -92,27 +112,44 @@ _BASE_CONF: dict[str, str] = {
     # pyarrow + the engine kernels (copy-on-write warm image) — removes the
     # per-worker import storm from the first job's critical path
     "spark.python.daemon.module": "jira_duplicate_detection_turkcell__spark.warm_daemon",
+    **{f"spark.executorEnv.{k}": v for k, v in _MALLOC_ENV.items()},
 }
 
-# glibc malloc tuning for the Python UDF workers (forked from the JVM, so
-# they inherit the driver process env in local mode; spark.executorEnv.*
-# covers cluster executors). Without this, numpy/Arrow batch temporaries a
-# few MB and up are mmap'd and munmap'd once per batch; under lazy host
-# paging each round-trip re-faults every page (~4µs each) and the workers
-# spend ~10× more time in the kernel than in user code (measured: 300 × 32 MB
-# alloc+touch = 9.1 s churning vs 0.15 s with these settings). Keeping freed
-# blocks on the arena (no trim, no mmap for ordinary sizes) makes worker
-# memory steady-state after the first batches.
-_MALLOC_ENV: dict[str, str] = {
-    "MALLOC_MMAP_THRESHOLD_": str(1 << 30),
-    "MALLOC_TRIM_THRESHOLD_": "-1",
-    # CPython's pymalloc maps/unmaps 256 KiB object arenas constantly under
-    # string churn (tokenize/regex produce millions of short-lived strings);
-    # routing object allocation through the tuned glibc malloc keeps those
-    # pages resident too. Measured: signature stage 28.6→12.5 s cold and
-    # 8.3→6.0 s warm at 8 cores on the 20k-page corpus.
-    "PYTHONMALLOC": "malloc",
-}
+
+def _master_and_parallelism(cores: int | None) -> tuple[str, int]:
+    if cores is not None:
+        return f"local[{cores}]", cores
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if env_cpus:
+        return f"local[{env_cpus}]", int(env_cpus)
+    return "local[*]", os.cpu_count() or 8
+
+
+def engine_conf(
+    cores: int | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> dict[str, str]:
+    """``TUNING_CONF`` plus the sizing for ``cores`` task slots, with
+    ``extra_conf`` applied last."""
+    default_parallelism = _master_and_parallelism(cores)[1]
+    if shuffle_partitions is None:
+        # ~4 waves per core: a single wave (partitions == cores) makes every
+        # stage straggler-bound — wall time is the *max* task, so one slow
+        # task wastes cores — while 4× gives even packing; AQE coalesces
+        # the excess away when the data is small. A cluster run raises this
+        # to O(total cores × 3-4) via --conf the same way.
+        shuffle_partitions = max(default_parallelism * 4, 16)
+    return {
+        **TUNING_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.default.parallelism": str(default_parallelism),
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g"),
+        # the sandbox ceiling share (24 g heap + 16 g off-heap ≪ 128 GiB);
+        # a real cluster sizes it per executor
+        "spark.memory.offHeap.size": "16g",
+        **(extra_conf or {}),
+    }
 
 
 def get_spark(
@@ -121,28 +158,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
+    """Build (or fetch) the engine SparkSession in this process.
 
     `cores=None` uses ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``);
     an explicit `cores` pins ``local[cores]`` — the bench harness uses this
     to evidence N→4N scaling (local[8] vs local[32]) per BASELINE.md.
     """
-    if cores is None:
-        env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env_cpus}]" if env_cpus else "local[*]"
-        default_parallelism = int(env_cpus) if env_cpus else (os.cpu_count() or 8)
-    else:
-        master = f"local[{cores}]"
-        default_parallelism = cores
-
-    if shuffle_partitions is None:
-        # ~4 waves per core: a single wave (partitions == cores) makes every
-        # stage straggler-bound — wall time is the *max* task, so one slow
-        # task wastes cores — while 4× gives even packing; AQE coalesces
-        # the excess away when the data is small. A cluster run raises this
-        # to O(total cores × 3-4) via --conf the same way.
-        shuffle_partitions = max(default_parallelism * 4, 16)
-
     # must land in os.environ *before* the JVM launches: local-mode Python
     # workers are forked by the JVM and inherit this process's environment.
     # Side effect (documented): these keys persist in the calling process for
@@ -159,20 +180,56 @@ def get_spark(
             f"{repo_root}{os.pathsep}{pythonpath}" if pythonpath else repo_root
         )
 
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.default.parallelism", str(default_parallelism))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .master(_master_and_parallelism(cores)[0])
+        .config(map=engine_conf(cores, shuffle_partitions, extra_conf))
+        .getOrCreate()
     )
-    for k, v in _MALLOC_ENV.items():
-        builder = builder.config(f"spark.executorEnv.{k}", v)
-    for k, v in _BASE_CONF.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+
+
+def submit_args(
+    cores: int, py_files: str, extra_conf: dict[str, str] | None = None
+) -> list[str]:
+    """spark-submit arguments that run the engine conf on ``local[cores]``
+    with the package zip ``py_files`` (scripts/make_pyfiles.sh). The
+    executors' PYTHONPATH names the zip because the warm daemon imports the
+    package before a worker puts ``--py-files`` on its ``sys.path``."""
+    conf = engine_conf(
+        cores, None, {"spark.executorEnv.PYTHONPATH": py_files, **(extra_conf or {})}
+    )
+    args = ["--master", f"local[{cores}]"]
+    for k, v in conf.items():
+        args += ["--conf", f"{k}={v}"]
+    return args + ["--py-files", py_files]
+
+
+def attach() -> SparkSession:
+    """The session this process was launched with (spark-submit's, or
+    ``get_spark``'s when run in-process), with every ``spark.sql.*`` tuning
+    key that the launch did not set applied at runtime. A key the launch
+    set is left as launched. The other tuning keys are static: a launch
+    without them runs without them, and ``conf_diff`` reports it."""
+    spark = SparkSession.builder.getOrCreate()
+    launched = spark.sparkContext.getConf()
+    for k, v in TUNING_CONF.items():
+        if k.startswith("spark.sql.") and not launched.contains(k):
+            spark.conf.set(k, v)
+    return spark
+
+
+def conf_diff(spark: SparkSession) -> dict[str, str | None]:
+    """Each tuning key whose effective value differs from ``TUNING_CONF``,
+    with the value that ran (None when unset). Spark prepends its own JVM
+    module flags to both ``extraJavaOptions`` keys, so those hold when the
+    effective value ends with the engine's flags."""
+    diff: dict[str, str | None] = {}
+    for k, want in TUNING_CONF.items():
+        got = spark.conf.get(k, None)
+        java_opts_hold = k.endswith(".extraJavaOptions") and (got or "").endswith(f" {want}")
+        if got != want and not java_opts_hold:
+            diff[k] = got
+    return diff
 
 
 def stop_spark() -> None:

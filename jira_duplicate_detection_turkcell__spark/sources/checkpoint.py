@@ -29,6 +29,7 @@ from pathlib import Path
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 @dataclass
@@ -80,9 +81,6 @@ class StageStore:
         self.recover()
 
     # -- paths -------------------------------------------------------------
-    def _data_dir(self, stage: str) -> Path:
-        return self.root / stage / "data"
-
     def _segment_dir(self, stage: str, segment: str) -> Path:
         return self.root / stage / segment
 
@@ -161,12 +159,18 @@ class StageStore:
         return manifest.get("config_fingerprint") == self.config_fingerprint
 
     def load(self, spark: SparkSession, stage: str) -> DataFrame:
-        if self._manifest_path(stage).exists():
-            segs = self.manifest(stage).segments or ["data"]
-            return spark.read.parquet(
-                *[str(self._segment_dir(stage, s)) for s in segs]
+        """The committed table of ``stage``: the union of its manifest's
+        segments, read with the manifest's schema, so no job infers it
+        from parquet footers. A stage without a manifest has no committed
+        table (its ``data/`` may be an aborted commit's), so it raises."""
+        if not self._manifest_path(stage).exists():
+            raise FileNotFoundError(
+                f"stage '{stage}' has no committed manifest under {self.root}"
             )
-        return spark.read.parquet(str(self._data_dir(stage)))
+        m = self.manifest(stage)
+        return spark.read.schema(DataType.fromDDL(m.schema_ddl)).parquet(
+            *[str(self._segment_dir(stage, s)) for s in m.segments]
+        )
 
     def manifest(self, stage: str) -> StageManifest:
         d = json.loads(self._manifest_path(stage).read_text())
@@ -263,8 +267,7 @@ class StageTxn:
         seg = self._segment_name()
         if self.store._manifest_path(stage).exists():
             self._gc[stage] = [
-                s for s in (self.store.manifest(stage).segments or ["data"])
-                if s != seg
+                s for s in self.store.manifest(stage).segments if s != seg
             ]
         self._stage_manifest(stage, self.store._write(stage, df, seg, metrics))
 
@@ -297,7 +300,7 @@ class StageTxn:
             # lives in the superseded manifests' history; totals are exact)
             file_count=total_files,
             partition_rows_truncated=total_files > len(new.partition_rows),
-            segments=[s for s in (prior.segments or ["data"]) if s != seg] + [seg],
+            segments=[s for s in prior.segments if s != seg] + [seg],
         ))
 
     def invalidate(self, stage: str) -> None:
@@ -310,7 +313,7 @@ class StageTxn:
         already-invalidated stage is a no-op."""
         self._invalidate.append(stage)
         if self.store._manifest_path(stage).exists():
-            segs = self.store.manifest(stage).segments or ["data"]
+            segs = self.store.manifest(stage).segments
             gc = self._gc.setdefault(stage, [])
             gc.extend(s for s in segs if s not in gc)
 

@@ -1,4 +1,4 @@
-"""Pre-warmed PySpark worker daemon (``spark.python.daemon.module``).
+"""Pre-warmed PySpark worker daemon, named in ``session.TUNING_CONF``.
 
 The stock daemon forks a fresh worker per task slot; each worker then pays
 the numpy/pandas/pyarrow import (~1.5-2 s of CPU and tens of MB of freshly
@@ -71,8 +71,8 @@ def patch_zipimport_invalidate() -> None:
 
 
 if __name__ == "__main__":
-    # Only the actual daemon launch (`python -m …warm_daemon` via
-    # spark.python.daemon.module) patches stdlib behavior — importing this
+    # Only the actual daemon launch (`python -m …warm_daemon` by Spark's
+    # Python worker factory) patches stdlib behavior — importing this
     # module (tests, tooling) must not change the importing process.
     patch_zipimport_invalidate()
 

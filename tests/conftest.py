@@ -30,11 +30,16 @@ def host_sized_conf() -> dict[str, str]:
     }
 
 
+# get_spark's sizing arguments for the test session (cores from
+# SPARK_GRAFT_CPUS); tests compare the session's conf against them
+SESSION_SIZING = {"shuffle_partitions": 8, "extra_conf": host_sized_conf()}
+
+
 @pytest.fixture(scope="session")
 def spark():
     from jira_duplicate_detection_turkcell__spark.session import get_spark
 
-    spark = get_spark("pytest", shuffle_partitions=8, extra_conf=host_sized_conf())
+    spark = get_spark("pytest", **SESSION_SIZING)
     yield spark
     # session is shared across all tests; pytest exit tears down the JVM.
 

@@ -90,6 +90,27 @@ def test_commit_lineage_of_empty_and_partly_empty_outputs(spark, tmp_path):
     assert_manifest_matches_rescan(spark, store, "head_empty")
 
 
+def test_load_runs_no_job_and_refuses_uncommitted_stage(spark, tmp_path):
+    """A load reads with the manifest's schema, so no job infers it from
+    footers; a stage without a manifest (an aborted commit's data/) is
+    refused rather than read."""
+    store = StageStore(tmp_path / "st")
+    df = spark.range(0, 50, 1, 2).selectExpr("id", "cast(id AS string) AS s")
+    store.commit("t", df)
+    sc = spark.sparkContext
+    sc.setJobGroup("stage-load", "StageStore.load")
+    try:
+        loaded = store.load(spark, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stage-load") == []
+    assert loaded.schema.simpleString() == df.schema.simpleString()
+    assert sorted(r["id"] for r in loaded.collect()) == list(range(50))
+    store.invalidate("t")
+    with pytest.raises(FileNotFoundError, match="stage 't'"):
+        store.load(spark, "t")
+
+
 def test_manifest_bounded_at_many_files(spark, tmp_path_factory):
     """10⁴-file commit: per-file lineage is capped (file_cap entries), the
     manifest stays small, and totals remain exact — the 100 TB posture for
