@@ -42,15 +42,18 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def _cfg_from_args(args):
     from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
 
-    return P.DedupConfig(
-        shingle_size=args.shingle_size,
-        num_perm=args.num_perm,
-        bands=args.bands,
-        rows=args.rows,
-        jaccard_threshold=args.jaccard_threshold,
-        enable_simhash=not args.no_simhash,
-        enable_substring=args.substring,
-    )
+    try:
+        return P.DedupConfig(
+            shingle_size=args.shingle_size,
+            num_perm=args.num_perm,
+            bands=args.bands,
+            rows=args.rows,
+            jaccard_threshold=args.jaccard_threshold,
+            enable_simhash=not args.no_simhash,
+            enable_substring=args.substring,
+        )
+    except ValueError as e:
+        raise SystemExit(f"--bands/--rows/--num-perm: {e}") from None
 
 
 SYNTH_SEED = 42
@@ -144,10 +147,9 @@ def cmd_dedup(args) -> None:
     from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
 
-    spark = session.attach()
-
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
+    spark = session.attach()
     store = (
         StageStore(args.checkpoint_dir, config_fingerprint=cfg.fingerprint())
         if args.checkpoint_dir
@@ -235,9 +237,9 @@ def cmd_append(args) -> None:
     from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
     from jira_duplicate_detection_turkcell__spark.streaming import incremental
 
-    spark = session.attach()
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
+    spark = session.attach()
     store = StageStore(args.state_dir, config_fingerprint=cfg.fingerprint())
 
     state_stages = ["docs", "signatures"]

@@ -1,12 +1,14 @@
-"""Shingling — entirely JVM-side (whole-stage codegen, zero Python).
+"""JVM-side shingling expressions (Spark SQL, zero Python).
 
 The reference embeds whole texts with a sentence-transformer
 (src/embedding_pipeline.py:96-108); the new engine's retrieval unit is the
-shingle (SURVEY.md §2.11 C1). Tokenize / n-gram / hash all happen in Spark SQL
-expressions (`split` / `transform` / `slice` / `xxhash64`), so the expensive
-per-character work never crosses the Arrow boundary — only the much smaller
-``array<long>`` shingle-hash sets do, and only when a pandas UDF (MinHash)
-actually needs them.
+shingle (SURVEY.md §2.11 C1). The signatures the pipeline ships come from
+the numpy kernel (operators/signatures.text_sign_compute), not from here.
+This module keeps the SQL-expressible definitions that other code needs:
+``char_shingles`` for the suffix path's fingerprints (operators/suffix.py),
+``word_gram_strings`` for exact n-gram Jaccard (operators/jaccard.py), and
+``tokens``/``word_shingles`` as the JVM reference the kernel's tokenizer and
+gram sets are tested against (tests/test_sign_kernel.py).
 """
 
 from __future__ import annotations

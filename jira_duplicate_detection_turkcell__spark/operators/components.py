@@ -184,7 +184,6 @@ def connected_components(
     hops_per_round: int = 2,
     small_graph_edges: int = 2_000_000,
     edge_count: int | None = None,
-    on_nonconverged: str = "star",
 ) -> DataFrame:
     """edges(key_l, key_r) + nodes(key) → (key, cluster_id) for every node.
 
@@ -216,15 +215,12 @@ def connected_components(
     unchanged. Set ``small_graph_edges=0`` to force the iterative path.
 
     A distributed fixpoint that has not converged within ``max_iter``
-    rounds is NEVER returned silently — an unconverged label table would
-    emit one component as several clusters. ``on_nonconverged`` picks the
-    recovery: ``"star"`` (default) re-resolves the graph with alternating
-    large-star/small-star (``_star_components``) — O(log² n) rounds at any
-    diameter, so even adversarial million-hop chains finish correct;
-    ``"raise"`` raises RuntimeError; ``"warn"`` prints to stderr and
-    returns the unconverged labels (diagnostics only). Realistic near-dup
-    graphs converge in a handful of propagation rounds and never reach
-    this.
+    rounds is NEVER returned — an unconverged label table would emit one
+    component as several clusters. The graph is re-resolved instead with
+    alternating large-star/small-star (``_star_components``) — O(log² n)
+    rounds at any diameter, so even adversarial million-hop chains finish
+    correct. Realistic near-dup graphs converge in a handful of propagation
+    rounds and never reach this.
     """
     def attach_singletons(assigned):
         # one shared epilogue for every exit path: nodes with no edges keep
@@ -295,7 +291,6 @@ def connected_components(
     # jump self-join re-executes the evolving subtree per jump, and with
     # graph diameter ≪ 100 the round count saved does not pay for it.
     # Adversarial million-hop chains would want large-star/small-star.)
-    converged = False
     for _ in range(max_iter):
         stepped = hop(labels)
         for _extra in range(hops_per_round - 1):
@@ -306,24 +301,12 @@ def connected_components(
         n_changed = new_labels.filter(F.col("changed")).count()
         labels = new_labels.drop("changed")
         if n_changed == 0:
-            converged = True
             break
-    if not converged:
-        msg = (
-            f"connected_components: label propagation did not converge in "
-            f"{max_iter} rounds × {hops_per_round} hops — graph diameter "
-            f"exceeds {max_iter * hops_per_round}"
+    else:
+        # no convergence in max_iter rounds: re-resolve with large/small-star
+        return attach_singletons(
+            _star_components(edges).withColumnRenamed("node", key_col)
         )
-        if on_nonconverged == "star":
-            return attach_singletons(
-                _star_components(edges).withColumnRenamed("node", key_col)
-            )
-        if on_nonconverged == "warn":
-            import sys
-
-            print(f"WARNING: {msg}", file=sys.stderr, flush=True)
-        else:
-            raise RuntimeError(msg + "; pass on_nonconverged='star' to re-resolve")
 
     return attach_singletons(
         labels.select(F.col("node").alias(key_col), F.col("label").alias("cluster_id"))

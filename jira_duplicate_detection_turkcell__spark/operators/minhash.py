@@ -1,11 +1,12 @@
-"""MinHash signatures + LSH band bucketing — the C1 dedup path.
+"""MinHash permutations + LSH band bucketing — the C1 dedup path.
 
 Replaces the reference's bi-encoder + per-platform FAISS top-k retrieval
 (src/embedding_pipeline.py:110-140, hybrid_search.py:357-419) with a
 deterministic, join-expressible scheme:
 
-    shingle hashes (JVM)  →  k-perm MinHash signature (numpy pandas UDF)
-    →  b bands × r rows, band hash (JVM)  →  bucket self-join  →  pairs
+    shingle hashes → k-perm MinHash signature → b bands × r rows, band hash
+    (all in the numpy signing kernel, operators/signatures.py)
+    →  bucket self-join (here)  →  pairs
 
 Scale posture (SURVEY.md §4): hot buckets (boilerplate — many pages sharing
 a band) are salted into bounded cells by the shared generator
@@ -16,12 +17,9 @@ is the backstop. Signature math is numpy uint64 (wrapping by construction)
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
 
 def _permutations(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Fixed affine permutation params (a odd, b) — deterministic per seed.
@@ -37,100 +35,6 @@ def _permutations(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     a = rng.integers(1, 1 << 61, size=num_perm, dtype=np.uint64) | np.uint64(1)
     b = rng.integers(0, 1 << 61, size=num_perm, dtype=np.uint64)
     return a, b
-
-
-def minhash_signature_udf(num_perm: int = 128, seed: int = 7):
-    """pandas UDF: array<long> shingle hashes → array<long> signature.
-
-    Vectorized across the whole Arrow batch: all rows' shingles are
-    concatenated into one uint64 vector; each permutation is one fused
-    multiply-add followed by a single ``np.minimum.reduceat`` over row
-    offsets — no per-row Python in the hot loop.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    a_params, b_params = _permutations(num_perm, seed)
-    empty_sig = np.full(num_perm, np.iinfo(np.int64).max, dtype=np.int64)
-
-    def compute(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for shingle_col in batch_iter:
-            lengths = shingle_col.map(len).to_numpy(dtype=np.int64)
-            flat = np.concatenate(
-                [np.asarray(v, dtype=np.int64) for v in shingle_col if len(v)]
-                or [np.array([], dtype=np.int64)]
-            ).view(np.uint64)
-            nonempty = lengths > 0
-            offsets = np.zeros(int(nonempty.sum()), dtype=np.int64)
-            np.cumsum(lengths[nonempty][:-1], out=offsets[1:])
-            sigs = np.empty((len(shingle_col), num_perm), dtype=np.int64)
-            sigs[~nonempty] = empty_sig
-            if flat.size:
-                rows = np.empty((num_perm, offsets.size), dtype=np.uint64)
-                for k in range(num_perm):
-                    hv = a_params[k] * flat + b_params[k]  # wrapping mod 2^64
-                    rows[k] = np.minimum.reduceat(hv, offsets)
-                sigs[nonempty] = rows.T.astype(np.int64, copy=False)
-            yield pd.Series(list(sigs))
-
-    return pandas_udf(compute, "array<long>")
-
-
-def add_signature(
-    df: DataFrame,
-    shingles_col: str = "shingles",
-    sig_col: str = "minhash_sig",
-    num_perm: int = 128,
-    seed: int = 7,
-) -> DataFrame:
-    udf = minhash_signature_udf(num_perm, seed)
-    return df.withColumn(sig_col, udf(F.col(shingles_col)))
-
-
-def band_hash_expr(sig: Column, bands: int, rows: int) -> Column:
-    """array of b band hashes — xxhash64 over each r-row signature slice."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: F.xxhash64(F.slice(sig, j * rows + 1, rows)),
-    )
-
-
-def screen_sketch_expr(sig: Column, num_perm: int) -> Column:
-    """array<long>: low bit of each signature slot, 64 slots per long.
-
-    Same packing as signatures._screen_from_sigs (chunk c bit j =
-    sig[c*64+j] & 1) — the JVM fallback for signature tables not produced
-    by the fused kernel. A pair's fraction of agreeing low bits estimates
-    Jaccard as 2·obs − 1 (verify.screen_agreement): a slot agrees with
-    probability J, and a disagreeing slot's low bits still collide with
-    probability 1/2, so E[obs] = J + (1 − J)/2 = (1 + J)/2.
-    """
-    n_chunks = (num_perm + 63) // 64
-    return F.array(
-        *[
-            F.aggregate(
-                F.reverse(F.slice(sig, c * 64 + 1, min(64, num_perm - c * 64))),
-                F.lit(0).cast("long"),
-                lambda acc, x: F.shiftleft(acc, 1).bitwiseOR(x.bitwiseAND(F.lit(1))),
-            )
-            for c in range(n_chunks)
-        ]
-    )
-
-
-def explode_bands(
-    df: DataFrame,
-    sig_col: str = "minhash_sig",
-    key_col: str = "url",
-    bands: int = 32,
-    rows: int = 4,
-) -> DataFrame:
-    """(key, band_id, band_hash) — one row per band per doc, JVM-side."""
-    return df.select(
-        F.col(key_col),
-        F.posexplode(band_hash_expr(F.col(sig_col), bands, rows)).alias(
-            "band_id", "band_hash"
-        ),
-    )
 
 
 def candidate_pairs(

@@ -11,16 +11,22 @@ gram hashes — allocating so heavily that GC made the stage *slower* at 4×
 the cores. ``text_sign_compute`` therefore moves the whole chain into numpy:
 
     text → whitespace tokens → token hashes (``pd.util.hash_array``, C-speed,
-    fixed key) → w-gram hashes (vectorized 64-bit mix over the flat token-hash
+    fixed key) → w-gram hashes (vectorized 64-bit mix over the flat unit
     vector, row boundaries masked) → per-row distinct via lexsort →
     k-perm MinHash (``np.minimum.reduceat``) → SimHash bit votes →
     per-band hashes from signature slices
 
+The gram units are the token hashes for ``shingle_kind="word"`` and the
+text's code points for ``"char"``; both kinds run the same mix, MinHash,
+band and screen code, and SimHash always votes over token hashes. This is
+the only code that computes signature values.
+
 One mapInPandas, one Arrow crossing of the text column, zero JVM array
 expressions, zero per-row Python in the hot loop. Gram *identity* (the
-token-tuple) is unchanged from functions/shingle.py, so shingle-set Jaccard —
-what verification and the brute-force oracle measure — is preserved under
-any 64-bit hash choice, modulo collisions.
+token tuple, or the ``w``-code-point substring) is unchanged from
+functions/shingle.py, so shingle-set Jaccard — what verification and the
+brute-force oracle measure — is preserved under any 64-bit hash choice,
+modulo collisions.
 """
 
 from __future__ import annotations
@@ -31,7 +37,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .minhash import _permutations
 
@@ -124,6 +129,51 @@ def _simhash_from_flat(tflat, tlengths, bit_idx):
     return sim
 
 
+def _token_hashes(texts: pd.Series):
+    r"""texts → (token lists, per-row token counts, flat uint64 token hashes).
+
+    Replicates the JVM tokenizer (functions/shingle.tokens =
+    F.split(F.trim(text), r"\s+")) EXACTLY: trim strips ASCII spaces only,
+    Java \s is the ASCII class [ \t\n\x0B\f\r] (NOT Unicode whitespace),
+    and split(limit=-1) keeps empty edge tokens. Python str.split() splits on
+    Unicode whitespace (U+2028, NEL, …) and drops empties — on crawl text
+    with exotic whitespace that forks the gram sets from the JVM/ngram/oracle
+    paths. Every signing path tokenizes here.
+    """
+    tok_lists = texts.str.strip(" ").str.split(r"[ \t\n\x0b\x0c\r]+", regex=True)
+    lengths = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=len(texts))
+    flat_tokens = np.array(list(chain.from_iterable(tok_lists)), dtype=object)
+    th = (
+        pd.util.hash_array(flat_tokens, categorize=True).astype(np.uint64, copy=False)
+        if flat_tokens.size
+        else np.empty(0, dtype=np.uint64)
+    )
+    return tok_lists, lengths, th
+
+
+def _row_grams(units: np.ndarray, lengths: np.ndarray, w: int):
+    """w-gram hashes along a flat uint64 unit vector with per-row
+    ``lengths``; grams that would cross a row boundary are masked out.
+    → (gram hashes, row index per gram)."""
+    row_id = np.repeat(np.arange(lengths.size, dtype=np.int64), lengths)
+    if units.size < w:
+        return np.empty(0, dtype=np.uint64), np.empty(0, dtype=np.int64)
+    L = units.size - w + 1
+    g = np.zeros(L, dtype=np.uint64)
+    for j in range(w):
+        g = _fmix64((g * _PRIME_1) ^ units[j : j + L])
+    valid = row_id[:L] == row_id[w - 1 :]
+    return g[valid], row_id[:L][valid]
+
+
+def check_sign_params(num_perm: int, bands: int, rows: int, shingle_kind: str) -> None:
+    """Raise ValueError for a signing config the kernel cannot run."""
+    if bands * rows != num_perm:
+        raise ValueError(f"bands*rows must equal num_perm: {bands}*{rows} != {num_perm}")
+    if shingle_kind not in ("word", "char"):
+        raise ValueError(f"shingle_kind must be 'word' or 'char', not {shingle_kind!r}")
+
+
 def text_sign_compute(
     shingle_w: int = 3,
     num_perm: int = 128,
@@ -131,12 +181,19 @@ def text_sign_compute(
     with_simhash: bool = True,
     bands: int = 32,
     rows: int = 4,
+    shingle_kind: str = "word",
 ):
     """mapInPandas kernel: (url, text, …) batches → (url, shingles,
-    minhash_sig, simhash, band_hashes). Pure numpy/pandas — unit-testable
-    without a JVM. Rows whose text is empty are dropped (mirrors the
-    ``length(text) > 0`` filter of the extract stage)."""
-    assert bands * rows == num_perm, "bands*rows must equal num_perm"
+    minhash_sig, simhash, band_hashes, screen). Pure numpy/pandas —
+    unit-testable without a JVM. Rows whose text is empty are dropped
+    (mirrors the ``length(text) > 0`` filter of the extract stage).
+
+    ``shingle_kind="word"`` grams are ``shingle_w`` consecutive tokens;
+    ``"char"`` grams are ``shingle_w`` consecutive code points. A row with
+    fewer than ``shingle_w`` units has one gram, the hash of its whole text
+    (functions/shingle.word_shingles / char_shingles follow the same rule).
+    """
+    check_sign_params(num_perm, bands, rows, shingle_kind)
     a_params, b_params = _permutations(num_perm, seed)
     empty_sig = np.full(num_perm, np.iinfo(np.int64).max, dtype=np.int64)
     bit_idx = np.arange(64, dtype=np.uint64)
@@ -150,52 +207,24 @@ def text_sign_compute(
             n = len(pdf)
             if n == 0:
                 continue
-            # Replicate the JVM tokenizer (functions/shingle.tokens =
-            # F.split(F.trim(text), r"\s+")) EXACTLY: trim strips ASCII
-            # spaces only, Java \s is the ASCII class [ \t\n\x0B\f\r]
-            # (NOT Unicode whitespace), and split(limit=-1) keeps empty
-            # edge tokens. Python str.split() splits on Unicode whitespace
-            # (U+2028, NEL, …) and drops empties — on crawl text with
-            # exotic whitespace that silently forked the gram sets between
-            # this kernel and the JVM/ngram/oracle paths.
-            tok_lists = texts.str.strip(" ").str.split(
-                r"[ \t\n\x0b\x0c\r]+", regex=True
-            )
-            lengths = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n)
-            flat_tokens = np.array(
-                list(chain.from_iterable(tok_lists)), dtype=object
-            )
-            th = (
-                pd.util.hash_array(flat_tokens, categorize=True)
-                .astype(np.uint64, copy=False)
-                if flat_tokens.size
-                else np.empty(0, dtype=np.uint64)
-            )
-
-            # ---- w-gram hashes along the flat vector, row-crossing masked
-            long_rows = lengths >= shingle_w
-            row_id = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            if th.size >= shingle_w:
-                L = th.size - shingle_w + 1
-                g = np.zeros(L, dtype=np.uint64)
-                for j in range(shingle_w):
-                    g = _fmix64((g * _PRIME_1) ^ th[j : j + L])
-                valid = row_id[:L] == row_id[shingle_w - 1 :]
-                g = g[valid]
-                g_row = row_id[:L][valid]
+            tok_lists, lengths, th = _token_hashes(texts)
+            if shingle_kind == "word":
+                g, g_row = _row_grams(th, lengths, shingle_w)
+                short_idx = np.flatnonzero(lengths < shingle_w)
+                whole = [" ".join(tok_lists.iat[i]) for i in short_idx]
             else:
-                g = np.empty(0, dtype=np.uint64)
-                g_row = np.empty(0, dtype=np.int64)
+                cps = np.frombuffer("".join(texts).encode("utf-32-le"), np.uint32)
+                n_cps = texts.str.len().to_numpy(dtype=np.int64)
+                g, g_row = _row_grams(cps.astype(np.uint64), n_cps, shingle_w)
+                short_idx = np.flatnonzero(n_cps < shingle_w)
+                whole = [texts.iat[i] for i in short_idx]
 
-            # ---- short rows (< w tokens): one gram = hash(" ".join(tokens))
-            short_idx = np.flatnonzero(~long_rows)
+            # ---- short rows (< w units): one gram = hash of the whole row
+            # (" ".join(tokens) for words, the text itself for chars)
             if short_idx.size:
-                joined = np.array(
-                    [" ".join(tok_lists.iat[i]) for i in short_idx], dtype=object
-                )
-                sh = pd.util.hash_array(joined, categorize=False).astype(
-                    np.uint64, copy=False
-                )
+                sh = pd.util.hash_array(
+                    np.array(whole, dtype=object), categorize=False
+                ).astype(np.uint64, copy=False)
                 g = np.concatenate([g, sh])
                 g_row = np.concatenate([g_row, short_idx.astype(np.int64)])
 
@@ -289,8 +318,12 @@ def sign_docs(
     with_simhash: bool = True,
     bands: int = 32,
     rows: int = 4,
+    shingle_kind: str = "word",
 ) -> DataFrame:
-    """docs(url, text) → (url, shingles, minhash_sig, simhash, band_hashes)
-    in a single mapInPandas pass (no JVM array expressions, one Arrow hop)."""
-    kernel = text_sign_compute(shingle_w, num_perm, seed, with_simhash, bands, rows)
+    """docs(url, text) → (url, shingles, minhash_sig, simhash, band_hashes,
+    screen) in a single mapInPandas pass (no JVM array expressions, one
+    Arrow hop)."""
+    kernel = text_sign_compute(
+        shingle_w, num_perm, seed, with_simhash, bands, rows, shingle_kind
+    )
     return docs.select("url", "text").mapInPandas(kernel, SIGN_SCHEMA)

@@ -1,9 +1,10 @@
 """64-bit SimHash + Hamming-ball bucketing — the C2 dedup path.
 
 Second retrieval path (the reference's analog is its second,
-platform-partitioned FAISS index, hybrid_search.py:150-156). Token hashing is
-JVM-side; the bit-vote aggregation is one numpy pandas UDF; bucketing uses
-the pigeonhole principle over **chunk pairs**: the 64 bits are split into 5
+platform-partitioned FAISS index, hybrid_search.py:150-156). The 64-bit
+values come from the numpy signing kernel (operators/signatures.py, or
+``add_simhash_kernel`` for a bare text table); bucketing uses the
+pigeonhole principle over **chunk pairs**: the 64 bits are split into 5
 chunks (13+13+13+13+12 bits); d ≤ 3 bit errors can touch at most 3 chunks,
 leaving ≥ 2 chunks clean, so every pair at Hamming distance ≤ 3 shares at
 least one of the C(5,2) = 10 *chunk-pair* keys — an equi-join on
@@ -22,14 +23,13 @@ per doc instead of 4.
 from __future__ import annotations
 
 from itertools import combinations
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.shingle import XXHASH_SEED
+from .signatures import _simhash_from_flat, _token_hashes
 
 # 5 chunks ⇒ any d≤3 pair has ≥2 clean chunks ⇒ shares a chunk-pair key
 _CHUNK_BITS = (13, 13, 13, 13, 12)
@@ -38,88 +38,24 @@ CHUNK_PAIRS = tuple(combinations(range(len(_CHUNK_BITS)), 2))
 N_CHUNKS = len(_CHUNK_BITS)
 
 
-def token_hashes(text: Column) -> Column:
-    """Non-distinct xxhash64 per whitespace token (tf preserved)."""
-    return F.transform(
-        F.split(F.trim(text), r"\s+"), lambda t: F.xxhash64(t, F.lit(XXHASH_SEED))
-    )
-
-
-def simhash_udf():
-    """pandas UDF: array<long> token hashes → 64-bit simhash (long).
-
-    Batch-vectorized: all tokens flattened to one uint64 vector; per-bit ±1
-    votes summed per row with ``np.add.reduceat``; sign → bits → packed long.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    bit_idx = np.arange(64, dtype=np.uint64)
-
-    def compute(batch_iter: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for col in batch_iter:
-            lengths = col.map(len).to_numpy(dtype=np.int64)
-            nonempty = lengths > 0
-            flat = np.concatenate(
-                [np.asarray(v, dtype=np.int64) for v in col if len(v)]
-                or [np.array([], dtype=np.int64)]
-            ).view(np.uint64)
-            out = np.zeros(len(col), dtype=np.int64)
-            if flat.size:
-                # (M, 64) ±1 votes; int16 keeps memory modest per Arrow batch
-                votes = (((flat[:, None] >> bit_idx) & np.uint64(1)).astype(np.int16) * 2 - 1)
-                offsets = np.zeros(int(nonempty.sum()), dtype=np.int64)
-                np.cumsum(lengths[nonempty][:-1], out=offsets[1:])
-                sums = np.add.reduceat(votes.astype(np.int32), offsets, axis=0)
-                bits = (sums > 0).astype(np.uint64)
-                packed = (bits << bit_idx).sum(axis=1, dtype=np.uint64)
-                out[nonempty] = packed.view(np.int64)  # reinterpret: bit 63 may be set
-            yield pd.Series(out)
-
-    return pandas_udf(compute, "long")
-
-
-def add_simhash(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    udf = simhash_udf()
-    return df.withColumn(out_col, udf(token_hashes(F.col(text_col))))
-
-
 def add_simhash_kernel(
     df: DataFrame, text_col: str = "text", key_col: str = "url", out_col: str = "simhash"
 ) -> DataFrame:
     """text → 64-bit simhash in ONE numpy mapInPandas pass.
 
-    Same construction as ``add_simhash`` but with tokenization + token
-    hashing in numpy/pandas (``pd.util.hash_array``) instead of the JVM
-    ``transform(split(...))`` higher-order expressions — those interpreted
-    array expressions were the round-1 profiled GC hotspot and keep the
-    simhash driver query the slowest headline entry. Hash family differs
-    from ``add_simhash`` (pandas hash vs xxhash64); both are valid simhash
-    token hashes — exactness is pinned by the brute-force Hamming pytest
-    over whichever values are in play.
+    The same tokenizer, token hashes and bit votes as the signing kernel
+    (operators/signatures.py), so a doc's simhash here equals its
+    ``simhash`` column there. Keeps every input row; it does not drop
+    empty texts the way the signing kernel does.
     """
-    from itertools import chain
-
-    from .signatures import _simhash_from_flat
-
     bit_idx = np.arange(64, dtype=np.uint64)
     key_t = df.schema[key_col].dataType.simpleString()
 
     def compute(batch_iter):
         for pdf in batch_iter:
-            texts = pdf[text_col].astype(object).fillna("")
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            tok_lists = texts.str.split()
-            lengths = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n)
-            flat_tokens = np.array(list(chain.from_iterable(tok_lists)), dtype=object)
-            th = (
-                pd.util.hash_array(flat_tokens, categorize=True).astype(
-                    np.uint64, copy=False
-                )
-                if flat_tokens.size
-                else np.empty(0, dtype=np.uint64)
-            )
+            _, lengths, th = _token_hashes(pdf[text_col].astype(object).fillna(""))
             sim = _simhash_from_flat(th, lengths, bit_idx)
             yield pd.DataFrame({key_col: pdf[key_col].to_numpy(), out_col: sim})
 

@@ -15,13 +15,12 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract import extract_docs
-from ..functions.shingle import char_shingles, word_shingles
 from ..operators import exact, minhash, signatures, simhash, suffix, verify
 from ..operators.components import connected_components
 from ..sources.checkpoint import StageStore
@@ -60,14 +59,13 @@ class DedupConfig:
     # seeds
     minhash_seed: int = 7
 
+    def __post_init__(self) -> None:
+        signatures.check_sign_params(
+            self.num_perm, self.bands, self.rows, self.shingle_kind
+        )
+
     def fingerprint(self) -> str:
         return hashlib.sha256(json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:16]
-
-
-def shingle_expr(cfg: DedupConfig, text_col: str = "text"):
-    if cfg.shingle_kind == "char":
-        return char_shingles(F.col(text_col), cfg.shingle_size)
-    return word_shingles(F.col(text_col), cfg.shingle_size)
 
 
 def extract_stage(pages: DataFrame) -> DataFrame:
@@ -117,34 +115,21 @@ def exact_star_edges(membership: DataFrame) -> DataFrame:
 
 
 def signature_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """docs(url, text) → + shingles, minhash_sig, simhash.
-
-    Word shingling uses the fused one-pass path (operators/signatures.py):
-    one tokenization, one Python round-trip for both signature kinds. Char
-    shingling falls back to the per-operator composition.
-    """
-    if cfg.shingle_kind == "word":
-        # single mapInPandas: tokenize/shingle/hash/sign/band entirely in
-        # numpy — no interpreted JVM array expressions (profiled GC storm at
-        # high core counts), and band hashes come out precomputed
-        return signatures.sign_docs(
-            docs,
-            shingle_w=cfg.shingle_size,
-            num_perm=cfg.num_perm,
-            seed=cfg.minhash_seed,
-            with_simhash=cfg.enable_simhash,
-            bands=cfg.bands,
-            rows=cfg.rows,
-        )
-    out = docs.withColumn("shingles", shingle_expr(cfg))
-    out = minhash.add_signature(
-        out, "shingles", "minhash_sig", cfg.num_perm, cfg.minhash_seed
+    """docs(url, text) → (url, shingles, minhash_sig, simhash, band_hashes,
+    screen) in one mapInPandas pass (operators/signatures.py) for either
+    shingle kind: tokenize/shingle/hash/sign/band entirely in numpy — no
+    interpreted JVM array expressions (profiled GC storm at high core
+    counts). ``simhash`` is all zeros when the kind is disabled."""
+    return signatures.sign_docs(
+        docs,
+        shingle_w=cfg.shingle_size,
+        num_perm=cfg.num_perm,
+        seed=cfg.minhash_seed,
+        with_simhash=cfg.enable_simhash,
+        bands=cfg.bands,
+        rows=cfg.rows,
+        shingle_kind=cfg.shingle_kind,
     )
-    if cfg.enable_simhash:
-        out = simhash.add_simhash(out, "text", "simhash")
-    # the signature table is the widest thing the pipeline materializes;
-    # dropping text (available from the docs stage) halves its on-wire size
-    return out.drop("text")
 
 
 def minhash_edges(
@@ -156,15 +141,9 @@ def minhash_edges(
     # sizing, both join sides) — materialize it once instead of re-exploding.
     # ``temps`` collects the pin so callers that materialize the edges (a
     # stage commit) can release it instead of leaking it for the session.
-    if "band_hashes" in signed.columns:
-        # band hashes were precomputed inside the signature kernel
-        bands_df = signed.select(
-            "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
-        ).persist()
-    else:
-        bands_df = minhash.explode_bands(
-            signed, "minhash_sig", "url", cfg.bands, cfg.rows
-        ).persist()
+    bands_df = signed.select(
+        "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
+    ).persist()
     if temps is not None:
         temps.append(bands_df)
     pairs, hot = minhash.candidate_pairs(bands_df, "url", cfg.minhash_bucket_cap)
@@ -247,24 +226,15 @@ def fused_bucket_table(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, 
     colliding pair itself is dropped as a self-row (P = 2⁻⁶⁴ per pair,
     orders of magnitude below MinHash-LSH's own miss rate).
     """
-    with_sim = cfg.enable_simhash and "simhash" in signed.columns
     n_scr = (cfg.num_perm + 63) // 64
 
-    if "band_hashes" in signed.columns:
-        band_arr = F.col("band_hashes")
-    else:
-        band_arr = minhash.band_hash_expr(F.col("minhash_sig"), cfg.bands, cfg.rows)
-    if "screen" in signed.columns:
-        screen_arr = F.col("screen")
-    else:
-        screen_arr = minhash.screen_sketch_expr(F.col("minhash_sig"), cfg.num_perm)
     structs = F.transform(
-        band_arr,
+        F.col("band_hashes"),
         lambda h, i: F.struct(
             F.lit(0).alias("bkind"), i.alias("bid"), h.alias("bkey")
         ),
     )
-    if with_sim:
+    if cfg.enable_simhash:
         structs = F.concat(
             structs,
             F.transform(
@@ -282,8 +252,8 @@ def fused_bucket_table(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, 
     buckets = signed.select(
         F.xxhash64("url").alias("nid"),
         F.explode(structs).alias("b"),
-        screen_arr.alias("_scr"),
-        *(["simhash"] if with_sim else []),
+        F.col("screen").alias("_scr"),
+        *(["simhash"] if cfg.enable_simhash else []),
     ).select(
         "b.bkind",
         "b.bid",
@@ -295,12 +265,12 @@ def fused_bucket_table(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, 
         ],
         *(
             [F.when(F.col("b.bkind") == 1, F.col("simhash")).alias("simhash")]
-            if with_sim
+            if cfg.enable_simhash
             else []
         ),
     )
     carry = [f"screen{c}" for c in range(n_scr)]
-    return buckets, carry + (["simhash"] if with_sim else [])
+    return buckets, carry + (["simhash"] if cfg.enable_simhash else [])
 
 
 def verify_fused_pairs(
@@ -318,8 +288,7 @@ def verify_fused_pairs(
     attach join also recovers the true URL per side, so the nid encoding
     never reaches the returned edge list.
     """
-    with_sim = cfg.enable_simhash and "simhash_l" in pairs.columns
-    if with_sim:
+    if cfg.enable_simhash:
         pairs = pairs.where(
             (F.col("bkind") == 0)
             | (
@@ -390,7 +359,6 @@ def run_dedup(
     stage whose manifest matches the current config fingerprint.
     """
     cfg = cfg or DedupConfig()
-    assert cfg.bands * cfg.rows == cfg.num_perm, "bands*rows must equal num_perm"
     if store is not None:
         store.config_fingerprint = cfg.fingerprint()
 

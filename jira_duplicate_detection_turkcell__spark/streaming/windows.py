@@ -45,9 +45,7 @@ def windowed_event_counts(
 
 def streaming_signatures(pages_stream: DataFrame, cfg=None) -> DataFrame:
     """pages stream → (url, minhash_sig[, simhash]) stream — the simhash
-    column is present only when the config enables that kind (the char-
-    shingle signature stage omits it under ``enable_simhash=False``, so a
-    hardcoded select would raise UNRESOLVED_COLUMN for a valid config).
+    column is projected only when the config enables that kind.
 
     Signatures are per-row pure functions, so the streaming plan is identical
     to the batch signature stage — stateless, no shuffle, safe at any
@@ -57,7 +55,4 @@ def streaming_signatures(pages_stream: DataFrame, cfg=None) -> DataFrame:
 
     cfg = cfg or DedupConfig()
     signed = signature_stage(extract_stage(pages_stream), cfg)
-    cols = ["url", "minhash_sig"]
-    if "simhash" in signed.columns:
-        cols.append("simhash")
-    return signed.select(*cols)
+    return signed.select("url", "minhash_sig", *(["simhash"] if cfg.enable_simhash else []))

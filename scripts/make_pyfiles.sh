@@ -34,7 +34,8 @@ print(f"""Deploy example (multi-executor cluster):
     --num-executors 1000 --executor-cores 4 --executor-memory 16g \\
     --conf spark.sql.shuffle.partitions=8000 \\
     --conf spark.memory.offHeap.size=16g \\
-{tuning}    --py-files dist/jdt_spark.zip \\
+{tuning}    --conf spark.executorEnv.PYTHONPATH=jdt_spark.zip \\
+    --py-files dist/jdt_spark.zip \\
     jira_duplicate_detection_turkcell__spark/cli.py \\
     dedup --input s3://bucket/pages --output s3://bucket/clusters \\
     --checkpoint-dir s3://bucket/ckpt

@@ -264,19 +264,14 @@ def test_connected_components_chain(spark, small_gate):
 def test_connected_components_nonconvergence_detected(spark):
     # a 100-hop chain on the distributed path with hops_per_round=1 and a
     # small max_iter: silent non-convergence would split the component into
-    # several clusters. on_nonconverged='raise' must raise; the default
-    # ('star') must hand over to large-star/small-star and still produce
-    # the correct single component; enough propagation rounds also converge
+    # several clusters. The loop must hand over to large-star/small-star
+    # and still produce the correct single component; enough propagation
+    # rounds also converge
     keys = [f"n{i:03d}" for i in range(101)]
     nodes = spark.createDataFrame([(k,) for k in keys], "url string")
     edges = spark.createDataFrame(
         list(zip(keys, keys[1:])), "key_l string, key_r string"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        components.connected_components(
-            edges, nodes, small_graph_edges=0, hops_per_round=1, max_iter=5,
-            on_nonconverged="raise",
-        ).collect()
     via_star = components.connected_components(
         edges, nodes, small_graph_edges=0, hops_per_round=1, max_iter=5
     ).collect()
@@ -337,7 +332,9 @@ def test_pipeline_end_to_end_recall(spark, pages, texts):
 def test_hot_buckets_are_salted_not_dropped(spark, signed, texts):
     # with a tiny cap many buckets run salted — results must be IDENTICAL to
     # the uncapped run (salting redistributes work, never drops pairs)
-    bands = P.minhash.explode_bands(signed, "minhash_sig", "url", CFG.bands, CFG.rows)
+    bands = signed.select(
+        "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
+    )
     pairs_salted, hot = P.minhash.candidate_pairs(bands, "url", max_bucket_size=2)
     pairs_plain, hot0 = P.minhash.candidate_pairs(bands, "url", max_bucket_size=10_000)
     assert hot.count() > 0 and hot0.count() == 0

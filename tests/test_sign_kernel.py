@@ -107,6 +107,42 @@ def test_text_sign_kernel_end_to_end_stability():
     assert np.array_equal(u0, u4)
 
 
+def test_char_kernel_grams_equal_python_substring_sets():
+    """shingle_kind="char": the kernel's per-doc distinct gram counts and
+    every pairwise Jaccard equal those of Python ``{t[i:i+w]}`` substring
+    sets (oracle_bruteforce.char_grams) — on synth page texts plus a
+    non-ASCII text, a non-BMP text (code points, not UTF-16 units) and a
+    text shorter than ``w`` (one whole-text gram)."""
+    from itertools import combinations
+
+    from jira_duplicate_detection_turkcell__spark import extract, synth
+
+    from tests.oracle_bruteforce import char_grams
+
+    w = 5
+    pages = synth.generate_pages_pdf(57, seed=42)
+    texts = [extract.extract_text(h) for h in pages["html"]] + [
+        "café naïve résumé déjà vu — ünïcödé",
+        "emoji \U0001F600\U0001F600 grin \U0001F600 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 text",
+        "abc",
+    ]
+    urls = [f"u{i:03d}" for i in range(len(texts))]
+    kernel = S.text_sign_compute(
+        shingle_w=w, num_perm=16, bands=4, rows=4, shingle_kind="char"
+    )
+    out = pd.concat(
+        list(kernel(iter([pd.DataFrame({"url": urls, "text": texts})]))),
+        ignore_index=True,
+    )
+    assert list(out["url"]) == urls
+    got = {u: set(sh.tolist()) for u, sh in zip(out["url"], out["shingles"])}
+    want = {u: char_grams(t, w) for u, t in zip(urls, texts)}
+    for u in urls:
+        assert len(got[u]) == len(want[u]), u
+    for a, b in combinations(urls, 2):
+        assert len(got[a] & got[b]) == len(want[a] & want[b]), (a, b)
+
+
 def test_zipimport_invalidate_stat_guard(tmp_path):
     """warm_daemon's stat guard: unchanged archives skip the directory
     re-read; a touched archive still invalidates."""

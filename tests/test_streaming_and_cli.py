@@ -430,6 +430,23 @@ def test_cli_rejects_non_positive_synth_n(tmp_path):
             cli.main(["dedup", "--synth-n", n, "--output", str(tmp_path / "o")])
 
 
+def test_config_errors_raise_and_cli_names_the_flags(tmp_path):
+    # a bad config fails at construction (not by an assert `python -O`
+    # strips, nor by silently taking the char path); the CLI turns it into
+    # a message naming the flags, before any Spark work
+    from jira_duplicate_detection_turkcell__spark import cli
+
+    with pytest.raises(ValueError, match=r"bands\*rows must equal num_perm"):
+        P.DedupConfig(bands=3)
+    with pytest.raises(ValueError, match="shingle_kind"):
+        P.DedupConfig(shingle_kind="chars")
+    for cmd in (["dedup"], ["append", "--state-dir", str(tmp_path / "s")]):
+        with pytest.raises(SystemExit, match="--bands/--rows/--num-perm"):
+            cli.main(
+                [*cmd, "--synth-n", "8", "--bands", "3", "--output", str(tmp_path / "o")]
+            )
+
+
 def test_cli_append_refuses_missing_state(spark, tmp_path):
     import pytest as _pytest
 
