@@ -20,7 +20,20 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jira_duplicate_detection_turkcell__spark.operators.buckets import (
+    salted_bucket_pairs,
+)
+from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
+
 JACCARD_NUM, JACCARD_DEN = 1, 2  # pair threshold 0.5 as an integer rational
+# the MinHash queries' engine config: the shipped signing kernel and fused
+# bucket table, band rows only (simhash off)
+_DRIVER_CFG = P.DedupConfig(
+    enable_simhash=False,
+    jaccard_threshold=JACCARD_NUM / JACCARD_DEN,
+    minhash_bucket_cap=100_000,
+)
+_BUCKET_COLS = ["bkind", "bid", "bkey"]
 SUBSTR_LEN = 48
 COS_THRESHOLD = 0.46
 KNN_K = 5
@@ -60,12 +73,11 @@ _SIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _docs_with_signatures(spark, sf_dir):
-    """(url, shingles, minhash_sig, band_hashes) via the fused one-pass
-    numpy signing kernel (operators/signatures.sign_docs). doc_id is carried
-    as a zero-padded string key so lexicographic key_l < key_r agrees with
-    the numeric order the DuckDB oracle uses."""
-    from jira_duplicate_detection_turkcell__spark.operators import signatures
-
+    """(url, shingles, minhash_sig, band_hashes, screen) via the one-pass
+    numpy signing kernel (plans/pipeline.signature_stage) under
+    ``_DRIVER_CFG``. doc_id is carried as a zero-padded string key so
+    lexicographic key_l < key_r agrees with the numeric order the DuckDB
+    oracle uses."""
     app_id = spark.sparkContext.applicationId
     cache_key = (app_id, sf_dir)
     cached = _SIGNED_CACHE.get(cache_key)
@@ -76,30 +88,37 @@ def _docs_with_signatures(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select(
         F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"), "text"
     )
-    signed = signatures.sign_docs(
-        docs, shingle_w=3, num_perm=128, seed=7, with_simhash=False
-    ).persist()
+    signed = P.signature_stage(docs, _DRIVER_CFG).persist()
     _SIGNED_CACHE[cache_key] = signed
     return signed
 
 
-def _minhash_verified_pairs(spark, sf_dir):
-    from jira_duplicate_detection_turkcell__spark.operators import minhash, verify
+def _bucket_self_pairs(buckets: DataFrame) -> DataFrame:
+    """Fused bucket rows → (bkind, key_l, key_r) candidate pairs in nid
+    space, through the shipped salted self-join."""
+    pairs, _hot = salted_bucket_pairs(
+        buckets, _BUCKET_COLS, "nid", _DRIVER_CFG.minhash_bucket_cap,
+        out_bucket_cols=["bkind"],
+    )
+    return pairs
 
-    signed = _docs_with_signatures(spark, sf_dir)
-    bands = signed.select(
-        "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
-    )
-    pairs, _hot = minhash.candidate_pairs(bands, "url", max_bucket_size=100_000)
+
+def _exact_edges(pairs: DataFrame, signed: DataFrame) -> DataFrame:
     # no signature screen here: the oracle gate needs EXACT set-Jaccard pair
-    # semantics; the screen's ~0.04%/pair miss rate belongs to the scale path
-    edges = verify.jaccard_edges(
-        pairs, signed, JACCARD_NUM / JACCARD_DEN, "url", "shingles"
+    # semantics, so the pairs go straight to the shipped exact step; the
+    # screen's per-pair miss rate belongs to the scale path
+    return P.exact_fused_edges(pairs, signed, _DRIVER_CFG.jaccard_threshold).select(
+        F.col("key_l").cast("long").alias("key_l"),
+        F.col("key_r").cast("long").alias("key_r"),
     )
-    return edges.select(
-        F.col("key_l").cast("long").alias("id_l"),
-        F.col("key_r").cast("long").alias("id_r"),
-    )
+
+
+def _minhash_verified_pairs(spark, sf_dir):
+    """Exact-Jaccard edges (key_l, key_r as doc_id longs) of the fused
+    band bucket self-join."""
+    signed = _docs_with_signatures(spark, sf_dir)
+    buckets, _carry = P.fused_bucket_table(signed, _DRIVER_CFG)
+    return _exact_edges(_bucket_self_pairs(buckets), signed)
 
 
 # --------------------------------------------------------------------------
@@ -113,9 +132,7 @@ def entry(spark: SparkSession) -> DataFrame:
         connected_components,
     )
 
-    pairs = _minhash_verified_pairs(spark, sf_dir).select(
-        F.col("id_l").alias("key_l"), F.col("id_r").alias("key_r")
-    )
+    pairs = _minhash_verified_pairs(spark, sf_dir)
     nodes = _t(spark, sf_dir, "documents").select("doc_id")
     return connected_components(pairs, nodes, key_col="doc_id")
 
@@ -135,7 +152,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         jaccard,
         simhash,
         suffix,
-        verify,
     )
     from jira_duplicate_detection_turkcell__spark.operators.components import (
         connected_components,
@@ -173,14 +189,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_minhash_lsh_pairs(spark, sf_dir):
-        return _minhash_verified_pairs(spark, sf_dir)
+        return _minhash_verified_pairs(spark, sf_dir).select(
+            F.col("key_l").alias("id_l"), F.col("key_r").alias("id_r")
+        )
 
     def q_simhash_hamming_pairs(spark, sf_dir):
+        # chunk-pair key rows through the shipped salted self-join, with the
+        # simhash carried so Hamming is computed inline (no attach join)
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         signed = simhash.add_simhash_kernel(docs, "text", "doc_id", "simhash")
-        chunks = simhash.explode_chunks(signed, "simhash", "doc_id")
-        pairs, _hot = simhash.simhash_candidate_pairs(chunks, "doc_id", 100_000)
-        return verify.hamming_edges(pairs, signed, 3, "doc_id", "simhash")
+        chunks = signed.select(
+            "doc_id",
+            "simhash",
+            F.posexplode(simhash.chunk_pair_keys("simhash")).alias(
+                "chunk_id", "chunk_val"
+            ),
+        )
+        pairs, _hot = salted_bucket_pairs(
+            chunks, ["chunk_id", "chunk_val"], "doc_id", 100_000,
+            carry_cols=["simhash"],
+        )
+        hamming = F.bit_count(F.col("simhash_l").bitwiseXOR(F.col("simhash_r")))
+        return (
+            pairs.select("key_l", "key_r", hamming.alias("hamming"))
+            .where(F.col("hamming") <= 3)
+            .distinct()
+        )
 
     def q_substring_pairs(spark, sf_dir):
         docs = _t(spark, sf_dir, "documents").select(
@@ -197,24 +231,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("key_l", "key_r").distinct()
 
     def q_dedup_clusters(spark, sf_dir):
-        pairs = _minhash_verified_pairs(spark, sf_dir).select(
-            F.col("id_l").alias("key_l"), F.col("id_r").alias("key_r")
-        )
+        pairs = _minhash_verified_pairs(spark, sf_dir)
         nodes = _t(spark, sf_dir, "documents").select("doc_id")
         return connected_components(pairs, nodes, key_col="doc_id")
 
     def q_incremental_clusters(spark, sf_dir):
         # the incremental-append construction, oracle-checked: treat odd
-        # doc_ids as an appended batch. Edges = (old×old via the batch
+        # doc_ids as an appended batch. Pairs = (old×old via the fused
         # bucket self-join) ∪ (new-touching via the SALTED BIPARTITE
-        # new×all band join — the SAME candidate-generation function the
+        # new×all bucket join — the SAME candidate-generation function the
         # shipping path calls, streaming/incremental.new_all_candidate_pairs,
         # so the oracle-proven construction and apply_append's code path
         # cannot drift); exact Jaccard verification, then CC. Append ≡
         # rebuild means the clusters must equal the full-batch
         # dedup_clusters oracle (same recursive-CTE SQL) — the driver gate
         # for the incremental path.
-        from jira_duplicate_detection_turkcell__spark.operators import minhash, verify
         from jira_duplicate_detection_turkcell__spark.streaming.incremental import (
             new_all_candidate_pairs,
         )
@@ -222,32 +253,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         signed = _docs_with_signatures(spark, sf_dir)
         is_new = F.col("url").cast("long") % 2 == 1
 
-        def bands(df):
-            return df.select(
-                "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
-            )
+        def buckets(df):
+            return P.fused_bucket_table(df, _DRIVER_CFG)[0]
 
-        old_pairs, _hot = minhash.candidate_pairs(
-            bands(signed.filter(~is_new)), "url", max_bucket_size=100_000
-        )
+        old_pairs = _bucket_self_pairs(buckets(signed.filter(~is_new)))
         cross_pairs = new_all_candidate_pairs(
-            bands(signed.filter(is_new)),
-            bands(signed),
-            ["band_id", "band_hash"],
-            "url",
-            100_000,
+            buckets(signed.filter(is_new)),
+            buckets(signed),
+            _BUCKET_COLS,
+            "nid",
+            _DRIVER_CFG.minhash_bucket_cap,
+            out_bucket_cols=["bkind"],
         )
-        pairs = (
-            old_pairs.select("key_l", "key_r")
-            .unionByName(cross_pairs.select("key_l", "key_r"))
-            .distinct()
+        pairs = old_pairs.select("bkind", "key_l", "key_r").unionByName(
+            cross_pairs.select("bkind", "key_l", "key_r")
         )
-        edges = verify.jaccard_edges(
-            pairs, signed, JACCARD_NUM / JACCARD_DEN, "url", "shingles"
-        ).select(
-            F.col("key_l").cast("long").alias("key_l"),
-            F.col("key_r").cast("long").alias("key_r"),
-        )
+        edges = _exact_edges(pairs, signed)
         nodes = _t(spark, sf_dir, "documents").select("doc_id")
         return connected_components(edges, nodes, key_col="doc_id")
 

@@ -1,24 +1,22 @@
-"""MinHash permutations + LSH band bucketing — the C1 dedup path.
+"""MinHash permutation parameters — the C1 dedup path's hash family.
 
 Replaces the reference's bi-encoder + per-platform FAISS top-k retrieval
 (src/embedding_pipeline.py:110-140, hybrid_search.py:357-419) with a
 deterministic, join-expressible scheme:
 
     shingle hashes → k-perm MinHash signature → b bands × r rows, band hash
-    (all in the numpy signing kernel, operators/signatures.py)
-    →  bucket self-join (here)  →  pairs
+    (all in the numpy signing kernel, operators/signatures.py, which draws
+    its permutations from ``_permutations`` here)
+    →  band rows of the fused bucket table → salted self-join → pairs
+    (plans/pipeline.fused_bucket_table, operators/buckets.py)
 
-Scale posture (SURVEY.md §4): hot buckets (boilerplate — many pages sharing
-a band) are salted into bounded cells by the shared generator
-(operators/buckets.py) — full recall, spread work; AQE skew join splitting
-is the backstop. Signature math is numpy uint64 (wrapping by construction)
-— never SQL arithmetic, which runs under ANSI mode.
+Signature math is numpy uint64 (wrapping by construction) — never SQL
+arithmetic, which runs under ANSI mode.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 
 def _permutations(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -35,25 +33,3 @@ def _permutations(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     a = rng.integers(1, 1 << 61, size=num_perm, dtype=np.uint64) | np.uint64(1)
     b = rng.integers(0, 1 << 61, size=num_perm, dtype=np.uint64)
     return a, b
-
-
-def candidate_pairs(
-    bands_df: DataFrame,
-    key_col: str = "url",
-    max_bucket_size: int = 200,
-) -> tuple[DataFrame, DataFrame]:
-    """LSH bucket self-join → distinct candidate pairs (key_l < key_r).
-
-    Returns ``(pairs, hot_buckets)``. Buckets larger than
-    ``max_bucket_size`` are *salted* (operators/buckets.py): members split
-    into ceil(m/cap) hash groups and paired cell-by-cell, so a boilerplate
-    mega-bucket's O(m²) pair work spreads over many bounded shuffle cells
-    instead of one task — full recall, no drops. ``hot_buckets`` is the
-    lineage table of buckets that ran salted.
-    """
-    from .buckets import salted_bucket_pairs
-
-    pairs, hot = salted_bucket_pairs(
-        bands_df, ["band_id", "band_hash"], key_col, max_bucket_size
-    )
-    return pairs.distinct(), hot

@@ -9,7 +9,11 @@ chunks (13+13+13+13+12 bits); d ≤ 3 bit errors can touch at most 3 chunks,
 leaving ≥ 2 chunks clean, so every pair at Hamming distance ≤ 3 shares at
 least one of the C(5,2) = 10 *chunk-pair* keys — an equi-join on
 (pair_id, concat of the two chunk values) has perfect recall for d ≤ 3.
-Verification is exact ``bit_count(l XOR r)`` (operators/verify.py).
+This module holds the keys (``chunk_pair_keys``) and a standalone kernel
+(``add_simhash_kernel``); the keys become the bkind 1 rows of the fused
+bucket table (plans/pipeline.fused_bucket_table), whose salted self-join
+pairs them and verifies exact ``bit_count(l XOR r)`` inline on the
+carried simhashes.
 
 Why pairs, not single chunks: round 1 used 4 single 16-bit chunks, whose
 2^16 key space saturates — at ≥10^7 docs *every* bucket exceeds any cap
@@ -80,34 +84,3 @@ def chunk_pair_keys(simhash_col: str = "simhash") -> Column:
             for i, j in CHUNK_PAIRS
         ]
     )
-
-
-def explode_chunks(
-    df: DataFrame, simhash_col: str = "simhash", key_col: str = "url"
-) -> DataFrame:
-    """(key, chunk_id, chunk_val): the 10 chunk-pair keys per doc, JVM-side.
-
-    ``chunk_id`` indexes CHUNK_PAIRS; ``chunk_val`` packs the two chunk
-    values (25-26 bits). Any two simhashes at Hamming distance ≤ 3 share at
-    least one (chunk_id, chunk_val) row.
-    """
-    return df.select(
-        F.col(key_col),
-        F.posexplode(chunk_pair_keys(simhash_col)).alias("chunk_id", "chunk_val"),
-    )
-
-
-def simhash_candidate_pairs(
-    chunks_df: DataFrame,
-    key_col: str = "url",
-    max_bucket_size: int = 500,
-) -> tuple[DataFrame, DataFrame]:
-    """Chunk-pair-key self-join → candidate pairs; hot buckets are salted
-    (operators/buckets.py), never dropped — full d ≤ 3 recall at any corpus
-    size, bounded per-task work."""
-    from .buckets import salted_bucket_pairs
-
-    pairs, hot = salted_bucket_pairs(
-        chunks_df, ["chunk_id", "chunk_val"], key_col, max_bucket_size
-    )
-    return pairs.distinct(), hot

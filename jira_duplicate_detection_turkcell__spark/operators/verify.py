@@ -1,22 +1,18 @@
-"""Exact pair verification — the C5 stage (replaces the cross-encoder re-rank,
-hybrid_search.py:424-455).
+"""Pair-verification pieces of the fused edge plan — the C5 stage (replaces
+the cross-encoder re-rank, hybrid_search.py:424-455).
 
-Candidates from any path (MinHash bands, SimHash chunks, winnowing
-fingerprints) are verified with *exact* set similarity before becoming edges:
-Jaccard over distinct shingle-hash sets for MinHash/winnow candidates,
-Hamming distance for SimHash. Everything is JVM-side (`array_intersect` /
-`size` / `bit_count`) and touches only the candidate pairs — never O(n²).
+``attach_pair_columns`` joins per-doc columns onto a candidate pair list;
+``screen_agreement`` is the low-bit MinHash screen and ``SCREEN_MARGIN`` its
+margin. The plan that uses them (inline Hamming, screen, exact Jaccard on
+the attached shingle sets) is plans/pipeline.verify_fused_pairs and
+exact_fused_edges. Everything is JVM-side and touches only candidate pairs —
+never O(n²).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# MinHash-agreement screen margin below the exact-Jaccard threshold: the
-# estimator's std at k=128 is ≤ 0.045, so 0.15 ≈ 3.3σ keeps the per-pair
-# screen miss probability ≈ 0.04%
-PREFILTER_MARGIN = 0.15
 
 # Margin for the compact low-bit screen (screen_agreement): its estimator
 # 2·obs − 1 has twice the binomial std (≤ 0.063 at k=128, J=0.7), so the
@@ -46,16 +42,6 @@ def attach_pair_columns(
     return pairs.join(left, "key_l").join(right, "key_r")
 
 
-def signature_agreement(sig_l: F.Column, sig_r: F.Column) -> F.Column:
-    """Fraction of agreeing MinHash positions — an unbiased Jaccard estimate."""
-    agree = F.aggregate(
-        F.zip_with(sig_l, sig_r, lambda a, b: F.when(a == b, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return agree.cast("double") / F.size(sig_l).cast("double")
-
-
 def screen_agreement(
     screens_l: list[F.Column], screens_r: list[F.Column], num_perm: int
 ) -> F.Column:
@@ -80,70 +66,3 @@ def screen_agreement(
         xor_bits = term if xor_bits is None else xor_bits + term
     obs = (F.lit(num_perm) - xor_bits).cast("double") / F.lit(float(num_perm))
     return F.lit(2.0) * obs - F.lit(1.0)
-
-
-def jaccard_edges(
-    pairs: DataFrame,
-    docs_with_shingles: DataFrame,
-    threshold: float,
-    key_col: str = "url",
-    shingles_col: str = "shingles",
-    sig_col: str | None = None,
-    prefilter_margin: float = PREFILTER_MARGIN,
-) -> DataFrame:
-    """Verified edges (key_l, key_r, jaccard) with exact Jaccard ≥ threshold.
-
-    Shingle arrays are produced distinct (functions/shingle.py), so
-    |intersect| / (|A| + |B| − |intersect|) is exact set Jaccard, computed
-    in whole-stage codegen.
-
-    With ``sig_col`` set, a cheap MinHash-agreement estimate screens the
-    candidate pairs first and only survivors (estimate ≥ threshold − margin)
-    pay for the exact set intersection. The estimator's std at k=128 is
-    ≤ 0.045, so the default margin ≈ 3.3σ keeps per-pair miss probability
-    ≈ 0.04% while cutting exact-verify volume by orders of magnitude on
-    boilerplate-heavy corpora (the measured hot spot at 10^5+ docs).
-    """
-    if sig_col:
-        # two-stage attach: screen on the (compact) signature columns first,
-        # then join the (fat) shingle sets only for surviving pairs — the
-        # shingle arrays are ~3× the signature size, and candidates typically
-        # outnumber survivors by orders of magnitude, so this cuts the
-        # dominant shuffle volume of the verification stage
-        screened = attach_pair_columns(pairs, docs_with_shingles, [sig_col], key_col)
-        est = signature_agreement(F.col(f"{sig_col}_l"), F.col(f"{sig_col}_r"))
-        survivors = screened.filter(est >= threshold - prefilter_margin).select(
-            "key_l", "key_r"
-        )
-        joined = attach_pair_columns(survivors, docs_with_shingles, [shingles_col], key_col)
-    else:
-        joined = attach_pair_columns(pairs, docs_with_shingles, [shingles_col], key_col)
-    inter = F.size(F.array_intersect(F.col(f"{shingles_col}_l"), F.col(f"{shingles_col}_r")))
-    union = (
-        F.size(F.col(f"{shingles_col}_l")) + F.size(F.col(f"{shingles_col}_r")) - inter
-    )
-    jac = F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
-    return (
-        joined.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("key_l", "key_r", "jaccard")
-    )
-
-
-def hamming_edges(
-    pairs: DataFrame,
-    docs_with_simhash: DataFrame,
-    max_distance: int,
-    key_col: str = "url",
-    simhash_col: str = "simhash",
-) -> DataFrame:
-    """Verified edges with exact 64-bit Hamming distance ≤ max_distance."""
-    joined = attach_pair_columns(pairs, docs_with_simhash, [simhash_col], key_col)
-    dist = F.bit_count(
-        F.col(f"{simhash_col}_l").bitwiseXOR(F.col(f"{simhash_col}_r"))
-    )
-    return (
-        joined.withColumn("hamming", dist)
-        .filter(F.col("hamming") <= max_distance)
-        .select("key_l", "key_r", "hamming")
-    )

@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract import extract_docs
-from ..operators import exact, minhash, signatures, simhash, suffix, verify
+from ..operators import exact, signatures, simhash, suffix, verify
+from ..operators.buckets import salted_bucket_pairs
 from ..operators.components import connected_components
 from ..sources.checkpoint import StageStore
 
@@ -40,7 +41,6 @@ class DedupConfig:
     # simhash
     enable_simhash: bool = True
     hamming_max: int = 3
-    simhash_bucket_cap: int = 500
     # substring / suffix-array
     enable_substring: bool = False
     # exact-dup collapse before near-dup (sign/pair representatives only;
@@ -137,32 +137,15 @@ def minhash_edges(
     cfg: DedupConfig,
     temps: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    # the band table feeds three consumers inside candidate_pairs (bucket
-    # sizing, both join sides) — materialize it once instead of re-exploding.
-    # ``temps`` collects the pin so callers that materialize the edges (a
-    # stage commit) can release it instead of leaking it for the session.
-    bands_df = signed.select(
-        "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
-    ).persist()
-    if temps is not None:
-        temps.append(bands_df)
-    pairs, hot = minhash.candidate_pairs(bands_df, "url", cfg.minhash_bucket_cap)
-    edges = verify.jaccard_edges(
-        pairs,
-        signed,
-        cfg.jaccard_threshold,
-        "url",
-        "shingles",
-        sig_col="minhash_sig",
-    )
-    return edges, hot
+    """MinHash-band edges: the fused plan restricted to bkind 0 rows.
+    ``temps`` is unused (nothing is pinned); it stays for callers that
+    pass it."""
+    return _bucket_edges(signed, cfg, kind=0)
 
 
 def simhash_edges(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataFrame]:
-    chunks = simhash.explode_chunks(signed, "simhash", "url")
-    pairs, hot = simhash.simhash_candidate_pairs(chunks, "url", cfg.simhash_bucket_cap)
-    edges = verify.hamming_edges(pairs, signed, cfg.hamming_max, "url", "simhash")
-    return edges, hot
+    """SimHash chunk-pair edges: the fused plan restricted to bkind 1 rows."""
+    return _bucket_edges(signed, cfg, kind=1)
 
 
 def fused_edges(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -189,14 +172,23 @@ def fused_edges(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
     for exact Jaccard. Output is the distinct verified edge list
     (key_l, key_r).
     """
-    from ..operators.buckets import salted_bucket_pairs
+    return _bucket_edges(signed, cfg, kind=None)[0]
 
+
+def _bucket_edges(
+    signed: DataFrame, cfg: DedupConfig, kind: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """(verified edges, hot buckets) of the fused plan, over the bucket rows
+    of one ``kind`` (None = both). The per-kind builders are restrictions
+    of the same plan, so their union is ``fused_edges`` edge for edge."""
     buckets, carry = fused_bucket_table(signed, cfg)
+    if kind is not None:
+        buckets = buckets.where(F.col("bkind") == kind)
     # one spreading granularity for both kinds — the cap no longer affects
     # recall (salting, not dropping), only per-cell work. Pairing runs in
     # nid space (see fused_bucket_table) — 8-byte keys through the fattest
     # shuffle instead of URL strings.
-    pairs, _hot = salted_bucket_pairs(
+    pairs, hot = salted_bucket_pairs(
         buckets,
         ["bkind", "bid", "bkey"],
         "nid",
@@ -204,7 +196,7 @@ def fused_edges(signed: DataFrame, cfg: DedupConfig) -> DataFrame:
         carry_cols=carry,
         out_bucket_cols=["bkind"],
     )
-    return verify_fused_pairs(pairs, signed, cfg)
+    return verify_fused_pairs(pairs, signed, cfg), hot
 
 
 def fused_bucket_table(signed: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, list[str]]:
@@ -306,8 +298,24 @@ def verify_fused_pairs(
         (F.col("bkind") == 1)
         | (est >= cfg.jaccard_threshold - verify.SCREEN_MARGIN)
     )
-    survivors = pairs.select("bkind", "key_l", "key_r").distinct()
+    return exact_fused_edges(pairs, signed, cfg.jaccard_threshold)
 
+
+def exact_fused_edges(
+    pairs: DataFrame, signed: DataFrame, threshold: float
+) -> DataFrame:
+    """Candidate pairs (bkind, key_l, key_r in nid space) → distinct edges
+    (key_l, key_r) in URL space, with exact Jaccard ≥ ``threshold`` on the
+    bkind 0 rows; bkind 1 rows pass (they are verified inline upstream).
+
+    The single attach join carries the fat shingle sets and recovers the
+    true URL per side, so the nid encoding never reaches the edge list.
+    Shingle arrays are produced distinct, so |∩| / (|A| + |B| − |∩|) is
+    exact set Jaccard, in whole-stage codegen. Called with no screen in
+    front, this is the exact-verification plan the driver's oracle
+    queries check.
+    """
+    survivors = pairs.select("bkind", "key_l", "key_r").distinct()
     nid_docs = signed.select(
         F.xxhash64("url").alias("nid"), "url", "shingles"
     )
@@ -318,7 +326,7 @@ def verify_fused_pairs(
         union > 0, inter.cast("double") / union.cast("double")
     ).otherwise(F.lit(0.0))
     return (
-        fat.where((F.col("bkind") == 1) | (jac >= cfg.jaccard_threshold))
+        fat.where((F.col("bkind") == 1) | (jac >= threshold))
         # back to URL keys; nid order ≠ url order, so re-normalize the pair
         .select(
             F.least("url_l", "url_r").alias("key_l"),
@@ -380,8 +388,8 @@ def run_dedup(
         store.commit(name, df, metrics)
         return store.load(spark, name)
 
-    # internal persists (band tables, substring grouping graphs) pinned by
-    # the edge builders — released once the consuming stage is materialized
+    # internal persists (substring grouping graphs) pinned by the substring
+    # edge builder — released once the consuming stage is materialized
     # so repeated run_dedup calls in one session don't accumulate dead
     # cached blocks that evict useful cache
     temps: list[DataFrame] = []
@@ -405,20 +413,11 @@ def run_dedup(
         signed = stage("signatures", lambda: signature_stage(sign_input, cfg))
 
         edge_parts: list[DataFrame] = [
-            stage(
-                "edges_minhash",
-                lambda: minhash_edges(signed, cfg, temps=temps)[0].select(
-                    "key_l", "key_r"
-                ),
-            )
+            stage("edges_minhash", lambda: minhash_edges(signed, cfg)[0])
         ]
-        release_temps()  # stage committed → the band-table pin is dead
         if cfg.enable_simhash:
             edge_parts.append(
-                stage(
-                    "edges_simhash",
-                    lambda: simhash_edges(signed, cfg)[0].select("key_l", "key_r"),
-                )
+                stage("edges_simhash", lambda: simhash_edges(signed, cfg)[0])
             )
         if cfg.enable_substring:
             # the postings table is the substring path's incremental-append

@@ -22,7 +22,6 @@ CFG = P.DedupConfig(
     # caps high enough that the 240-doc corpus never trips them; the skew
     # test below exercises the capped path explicitly
     minhash_bucket_cap=10_000,
-    simhash_bucket_cap=10_000,
 )
 
 
@@ -332,11 +331,14 @@ def test_pipeline_end_to_end_recall(spark, pages, texts):
 def test_hot_buckets_are_salted_not_dropped(spark, signed, texts):
     # with a tiny cap many buckets run salted — results must be IDENTICAL to
     # the uncapped run (salting redistributes work, never drops pairs)
-    bands = signed.select(
-        "url", F.posexplode("band_hashes").alias("band_id", "band_hash")
+    from jira_duplicate_detection_turkcell__spark.operators.buckets import (
+        salted_bucket_pairs,
     )
-    pairs_salted, hot = P.minhash.candidate_pairs(bands, "url", max_bucket_size=2)
-    pairs_plain, hot0 = P.minhash.candidate_pairs(bands, "url", max_bucket_size=10_000)
+
+    buckets, _carry = P.fused_bucket_table(signed, CFG)
+    cols = ["bkind", "bid", "bkey"]
+    pairs_salted, hot = salted_bucket_pairs(buckets, cols, "nid", cap=2)
+    pairs_plain, hot0 = salted_bucket_pairs(buckets, cols, "nid", cap=10_000)
     assert hot.count() > 0 and hot0.count() == 0
     got_salted = {(r["key_l"], r["key_r"]) for r in pairs_salted.collect()}
     got_plain = {(r["key_l"], r["key_r"]) for r in pairs_plain.collect()}

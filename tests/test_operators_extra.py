@@ -117,11 +117,12 @@ def test_cosine_pairs_vs_numpy(emb):
     assert got == truth
 
 
-def test_simhash_kernel_pairs_exact_vs_bruteforce(docs):
-    # the numpy text→simhash kernel + chunk-pair bucketing must be EXACT for
+def test_simhash_kernel_pairs_exact_vs_bruteforce(spark, docs):
+    # the driver's simhash_hamming_pairs query (numpy text→simhash kernel +
+    # chunk-pair bucketing through the salted self-join) must be EXACT for
     # Hamming ≤ 3 (pigeonhole over C(5,2) chunk-pair keys)
+    from __spark_entry__ import queries
     from jira_duplicate_detection_turkcell__spark.operators import simhash as sh
-    from jira_duplicate_detection_turkcell__spark.operators import verify
 
     signed = sh.add_simhash_kernel(docs, "text", "doc_id", "simhash")
     sims = {r["doc_id"]: r["simhash"] & ((1 << 64) - 1) for r in signed.collect()}
@@ -130,11 +131,33 @@ def test_simhash_kernel_pairs_exact_vs_bruteforce(docs):
         for a, b in combinations(sorted(sims), 2)
         if bin(sims[a] ^ sims[b]).count("1") <= 3
     }
-    chunks = sh.explode_chunks(signed, "simhash", "doc_id")
-    pairs, _hot = sh.simhash_candidate_pairs(chunks, "doc_id", 100_000)
-    edges = verify.hamming_edges(pairs, signed, 3, "doc_id", "simhash")
+    edges = queries()["simhash_hamming_pairs"](spark, SF_DIR)
     got = {(r["key_l"], r["key_r"]) for r in edges.collect()}
     assert got == truth
+
+
+def test_driver_minhash_queries_match_duckdb_oracle(spark):
+    """The driver's MinHash queries (pair list, clusters, and the
+    incremental construction) run the fused bucket table, the salted
+    self-join and the exact step; each must equal its DuckDB oracle."""
+    import duckdb
+
+    from __spark_entry__ import oracle_sql, queries
+    from scripts.selfcheck import compare
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
+    )
+    qs, oracles = queries(), oracle_sql()
+    problems = {}
+    for name in ["minhash_lsh_pairs", "dedup_clusters", "incremental_clusters"]:
+        got = qs[name](spark, SF_DIR).toPandas()
+        want = con.sql(oracles[name]).df()
+        assert len(want) > 0, name
+        if diff := compare(name, got, want):
+            problems[name] = diff
+    assert problems == {}
 
 
 def test_cosine_pairs_empty_and_guarded(emb, spark):
@@ -216,19 +239,23 @@ def test_session_plans_shuffled_hash_join_not_smj(spark):
         spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
 
 
-def test_fused_pair_join_plan_no_sort_and_broadcast_attach(spark):
-    """The fused pair join's own plan: no SortMergeJoin anywhere (at test
-    scale its joins are BHJ or SHJ; Sort nodes feeding a join would mark
-    an SMJ regression) and the hot-bucket salt attach stays an explicit
-    BroadcastHashJoin."""
+@pytest.mark.parametrize("builder", ["fused_edges", "minhash_edges", "simhash_edges"])
+def test_fused_pair_join_plan_no_sort_and_broadcast_attach(spark, builder):
+    """The fused pair join's own plan, in-memory (``fused_edges``) and as
+    the per-kind restrictions checkpointed runs commit: no SortMergeJoin
+    anywhere (at test scale its joins are BHJ or SHJ; Sort nodes feeding a
+    join would mark an SMJ regression), the hot-bucket salt attach stays an
+    explicit BroadcastHashJoin, and no interpreted ``zip_with`` screen."""
     from jira_duplicate_detection_turkcell__spark import synth
     from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
 
     pages = spark.createDataFrame(synth.generate_pages_pdf(32, seed=42))
     signed = P.signature_stage(P.extract_stage(pages), P.DedupConfig())
-    plan = _plan_of(P.fused_edges(signed, P.DedupConfig()))
+    edges = getattr(P, builder)(signed, P.DedupConfig())
+    plan = _plan_of(edges if builder == "fused_edges" else edges[0])
     assert "SortMergeJoin" not in plan, "SMJ regression — check session config"
     assert "BroadcastHashJoin" in plan, "salt attach must broadcast"
+    assert "zip_with" not in plan
 
 
 def test_hyperplane_lsh_subset_of_bruteforce(emb):

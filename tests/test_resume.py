@@ -9,7 +9,7 @@ from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
 from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
 from tests.oracle_bruteforce import assert_manifest_matches_rescan
 
-CFG = P.DedupConfig(minhash_bucket_cap=10_000, simhash_bucket_cap=10_000)
+CFG = P.DedupConfig(minhash_bucket_cap=10_000)
 
 
 @pytest.fixture(scope="module")
@@ -29,6 +29,12 @@ def test_full_run_commits_all_stages(spark, pages, tmp_path_factory):
     for stage in ["docs", "signatures", "edges_minhash", "edges_simhash", "clusters"]:
         assert store.is_committed(stage), stage
         assert_manifest_matches_rescan(spark, store, stage)
+    # the per-kind stages are restrictions of the in-memory fused plan:
+    # their union is its edge list, edge for edge
+    in_memory = P.run_dedup(spark, pages, CFG)
+    assert {tuple(r) for r in result["edges"].collect()} == {
+        tuple(r) for r in in_memory["edges"].collect()
+    }
 
     # resume with everything committed → identical output, no recompute
     again = P.run_dedup(spark, pages, CFG, StageStore(root))
@@ -54,7 +60,6 @@ def test_config_change_invalidates_checkpoints(spark, pages, tmp_path_factory):
     cfg2 = P.DedupConfig(
         jaccard_threshold=0.5,
         minhash_bucket_cap=10_000,
-        simhash_bucket_cap=10_000,
     )
     store2 = StageStore(root)
     P.run_dedup(spark, pages, cfg2, store2)
@@ -147,7 +152,7 @@ def test_append_from_committed_postings_state(spark, pages, tmp_path_factory):
     from jira_duplicate_detection_turkcell__spark.streaming import incremental
 
     cfg = P.DedupConfig(
-        enable_substring=True, minhash_bucket_cap=10_000, simhash_bucket_cap=10_000
+        enable_substring=True, minhash_bucket_cap=10_000
     )
     pdf = synth.generate_pages_pdf(96, seed=42)
     batch2 = (pdf.index % 3) == 2  # interleaved: old×new substring edges exist

@@ -16,7 +16,7 @@ from jira_duplicate_detection_turkcell__spark.plans import pipeline as P
 from jira_duplicate_detection_turkcell__spark.streaming import incremental, windows
 
 SF_DIR = "/root/testdata/sf0.001"
-CFG = P.DedupConfig(minhash_bucket_cap=10_000, simhash_bucket_cap=10_000)
+CFG = P.DedupConfig(minhash_bucket_cap=10_000)
 
 
 def test_streaming_windowed_counts_match_batch(spark, tmp_path):
@@ -93,12 +93,12 @@ def test_streaming_signatures_char_shingles_without_simhash(spark):
         CFG,
         # caps of 2: every bucket trips the cap, the whole append runs
         # through salted bipartite cells — results must be identical
-        P.DedupConfig(minhash_bucket_cap=2, simhash_bucket_cap=2),
+        P.DedupConfig(minhash_bucket_cap=2),
         # substring kind ON (round 3 rejected it at the API boundary):
         # append must maintain the winnowed-postings state and emit the
         # same exact substring edges a rebuild would
         P.DedupConfig(
-            enable_substring=True, minhash_bucket_cap=10_000, simhash_bucket_cap=10_000
+            enable_substring=True, minhash_bucket_cap=10_000
         ),
         # sampled substring mode: nomination runs through the salted
         # bipartite new×all postings join
@@ -107,7 +107,6 @@ def test_streaming_signatures_char_shingles_without_simhash(spark):
             substr_sample=3,
             substr_min_len=32,
             minhash_bucket_cap=10_000,
-            simhash_bucket_cap=10_000,
         ),
     ],
     ids=["simhash_on", "hot_buckets_salted", "substring_on", "substring_sampled"],
@@ -167,7 +166,6 @@ def test_incremental_substring_certificate_clusters_equal(spark):
         enable_substring=True,
         substr_max_group_docs=4,
         minhash_bucket_cap=10_000,
-        simhash_bucket_cap=10_000,
     )
     pdf = synth.generate_pages_pdf(96, seed=42)
     batch2 = (pdf.index % 3) == 2
@@ -193,7 +191,7 @@ def test_incremental_chained_appends_equal_full_rerun(spark):
     the loop a real ingestion runs. Every edge kind enabled (substring
     included); final edges and clusters must equal one full batch run."""
     cfg = P.DedupConfig(
-        enable_substring=True, minhash_bucket_cap=10_000, simhash_bucket_cap=10_000
+        enable_substring=True, minhash_bucket_cap=10_000
     )
     pdf = synth.generate_pages_pdf(96, seed=42)
     slot = pdf.index % 4  # interleaved 4-way: cross-batch edges in every step
@@ -231,7 +229,7 @@ def test_random_split_appends_equal_full_rerun(spark, seed, k):
     import numpy as np
 
     cfg = P.DedupConfig(
-        enable_substring=True, minhash_bucket_cap=10_000, simhash_bucket_cap=10_000
+        enable_substring=True, minhash_bucket_cap=10_000
     )
     pdf = synth.generate_pages_pdf(96, seed=42)
     rng = np.random.RandomState(seed)
@@ -266,7 +264,7 @@ def test_incremental_empty_batch_is_identity(spark):
     """Real ingestion hits empty batches; append of zero pages must leave
     edges and clusters exactly unchanged (every edge kind enabled)."""
     cfg = P.DedupConfig(
-        enable_substring=True, minhash_bucket_cap=10_000, simhash_bucket_cap=10_000
+        enable_substring=True, minhash_bucket_cap=10_000
     )
     pages = spark.createDataFrame(synth.generate_pages_pdf(24, seed=42))
     base = P.run_dedup(spark, pages, cfg)

@@ -23,7 +23,7 @@ from jira_duplicate_detection_turkcell__spark.sources.checkpoint import (
 )
 from tests.oracle_bruteforce import assert_manifest_matches_rescan
 
-CFG = P.DedupConfig(minhash_bucket_cap=10_000, simhash_bucket_cap=10_000)
+CFG = P.DedupConfig(minhash_bucket_cap=10_000)
 
 
 def _range_df(spark, lo, hi):
