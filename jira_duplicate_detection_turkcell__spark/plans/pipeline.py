@@ -314,8 +314,12 @@ def exact_fused_edges(
     exact set Jaccard, in whole-stage codegen. Called with no screen in
     front, this is the exact-verification plan the driver's oracle
     queries check.
+
+    One aggregate makes the pairs distinct before the attach: a pair found
+    by both kinds keeps bkind 1 (it passes either way), and distinct nid
+    pairs map to distinct URL pairs, so no second distinct is needed.
     """
-    survivors = pairs.select("bkind", "key_l", "key_r").distinct()
+    survivors = pairs.groupBy("key_l", "key_r").agg(F.max("bkind").alias("bkind"))
     nid_docs = signed.select(
         F.xxhash64("url").alias("nid"), "url", "shingles"
     )
@@ -332,7 +336,6 @@ def exact_fused_edges(
             F.least("url_l", "url_r").alias("key_l"),
             F.greatest("url_l", "url_r").alias("key_r"),
         )
-        .distinct()
     )
 
 
