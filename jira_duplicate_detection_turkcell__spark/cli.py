@@ -17,9 +17,11 @@ Deployment shape per BASELINE.md: ``spark-submit --py-files pkg.zip cli.py …``
 
 Both subcommands run on the session they were launched with and apply the
 engine's runtime SQL tuning the launch left unset (``session.attach``); the
-JSON line's ``conf_diff`` names every engine tuning key that did not hold.
-Launch with ``session.submit_args`` so that it is ``{}`` (run from the repo
-root after scripts/make_pyfiles.sh):
+JSON line's ``conf_diff`` names every engine tuning key that did not hold,
+and its ``codegen_compiles`` counts the generated classes the run compiled
+(0 when every plan it ran was already in the session's class cache).
+Launch with ``session.submit_args`` so that ``conf_diff`` is ``{}`` (run from
+the repo root after scripts/make_pyfiles.sh):
 
   mapfile -t ARGS < <(python -c 'from jira_duplicate_detection_turkcell__spark import session; print(*session.submit_args(32, "dist/jdt_spark.zip"), sep="\\n")')
   spark-submit "${ARGS[@]}" jira_duplicate_detection_turkcell__spark/cli.py \\
@@ -81,11 +83,22 @@ def _pages_from_args(spark, args):
     return spark.read.parquet(args.input)
 
 
+def _codegen_compiles(spark) -> int:
+    """The JVM's count of generated classes compiled so far (Spark's
+    ``CodegenMetrics``), read through the session's gateway: no Spark job.
+    A compile is a miss in the generated-class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def _report_output(spark, clusters, output: str, t0: float, extra: dict | None = None) -> None:
     """Write the clusters parquet and print the one-line JSON report, with
     both counts observed by the write: ``cluster_id`` is the component's
     minimum url, so each cluster has one row with ``url == cluster_id``.
-    One elapsed reading feeds both ``seconds`` and ``docs_per_sec``."""
+    One elapsed reading feeds both ``seconds`` and ``docs_per_sec``. When
+    ``extra`` holds ``codegen_compiles``, it is the ``_codegen_compiles``
+    reading at the start of the run, and the record reports the classes
+    compiled since, this write's included."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -99,12 +112,15 @@ def _report_output(spark, clusters, output: str, t0: float, extra: dict | None =
     ).write.mode("overwrite").parquet(output)
     n_docs, n_clusters = observed.get["docs"], observed.get["clusters"]
     elapsed = time.time() - t0
+    extra = dict(extra or {})
+    if "codegen_compiles" in extra:
+        extra["codegen_compiles"] = _codegen_compiles(spark) - extra["codegen_compiles"]
     record = {
         "docs": n_docs,
         "clusters": n_clusters,
         "dup_docs": n_docs - n_clusters,
         "conf_diff": session.conf_diff(spark),
-        **(extra or {}),
+        **extra,
         "seconds": round(elapsed, 2),
         "docs_per_sec": round(n_docs / elapsed, 1) if elapsed > 0 else None,
         "output": output,
@@ -150,6 +166,7 @@ def cmd_dedup(args) -> None:
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
     spark = session.attach()
+    compiles0 = _codegen_compiles(spark)
     store = (
         StageStore(args.checkpoint_dir, config_fingerprint=cfg.fingerprint())
         if args.checkpoint_dir
@@ -212,7 +229,7 @@ def cmd_dedup(args) -> None:
         tmp.rename(synth_meta)
     _report_output(
         spark, result["clusters"], args.output, t0,
-        extra={"config_fingerprint": cfg.fingerprint()},
+        extra={"config_fingerprint": cfg.fingerprint(), "codegen_compiles": compiles0},
     )
 
 
@@ -240,6 +257,7 @@ def cmd_append(args) -> None:
     cfg = _cfg_from_args(args)
     _validate_source_args(args)
     spark = session.attach()
+    compiles0 = _codegen_compiles(spark)
     store = StageStore(args.state_dir, config_fingerprint=cfg.fingerprint())
 
     state_stages = ["docs", "signatures"]
@@ -356,7 +374,11 @@ def cmd_append(args) -> None:
 
     _report_output(
         spark, store.load(spark, "clusters"), args.output, t0,
-        extra={"generation": generation, "config_fingerprint": cfg.fingerprint()},
+        extra={
+            "generation": generation,
+            "config_fingerprint": cfg.fingerprint(),
+            "codegen_compiles": compiles0,
+        },
     )
 
 

@@ -1,13 +1,16 @@
 """The engine's SparkSession conf; the one place that knows it.
 
 ``TUNING_CONF`` (Arrow UDF transfer, AQE + skew join — LSH hot buckets are
-the canonical skew source, SURVEY.md §4 — shuffled-hash joins, the warm
-worker daemon, worker malloc tuning) must hold wherever the engine runs.
-Sizing (shuffle partitions, parallelism, driver heap, off-heap) is the
-deployment's choice. ``engine_conf`` returns both; ``get_spark`` (tests,
-bench, ``__spark_entry__.py``) and ``submit_args`` (spark-submit) launch
-it, and the CLI joins its launch through ``attach`` and reports tuning
-that did not hold through ``conf_diff``.
+the canonical skew source, SURVEY.md §4 — shuffled-hash joins, the codegen
+class cache size, the warm worker daemon, worker malloc tuning) must hold
+wherever the engine runs. Sizing (shuffle partitions, parallelism, driver
+heap, off-heap) is the deployment's choice. ``engine_conf`` returns both;
+``get_spark`` (tests, bench, ``__spark_entry__.py``) and ``submit_args``
+(spark-submit) launch it, and the CLI joins its launch through ``attach``
+and reports tuning that did not hold through ``conf_diff``. Only the keys
+Spark lets a running session change can be applied after launch; the static
+ones (JVM options, worker env, the daemon, static SQL confs such as the
+codegen cache size) hold only when the launch carries them.
 """
 
 from __future__ import annotations
@@ -108,6 +111,18 @@ TUNING_CONF: dict[str, str] = {
     # coalescing left it 11 tasks ≈ 1.4 waves on 8 cores with straggler
     # tails. More, smaller sorts also stay young-gen-sized.
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16MB",
+    # Generated-class cache (Janino compiles, keyed by the generated source;
+    # default 100, LRU). A checkpointed benchmark op (1000 docs, --substring)
+    # generates 138 distinct classes, so at 100 the LRU cycle missed on
+    # almost every lookup: every op after the first recompiled 129 classes
+    # (append: 67-69), and HotSpot ran each fresh class interpreted and
+    # JIT-compiled it again. At 1000 every later op compiles 0 on both
+    # benchmark workloads (measured at get_spark(cores=4) by the JVM's
+    # CodegenMetrics compile count), cutting checkpointed cpu_s ~20 %. One
+    # session running both workloads and their in-memory reference runs
+    # holds 287 classes, so 1000 is ~3.5x headroom. A static SQL conf: it
+    # must be on the launch.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # fork workers from a daemon that has already imported numpy/pandas/
     # pyarrow + the engine kernels (copy-on-write warm image) — removes the
     # per-worker import storm from the first job's critical path
@@ -206,14 +221,16 @@ def submit_args(
 
 def attach() -> SparkSession:
     """The session this process was launched with (spark-submit's, or
-    ``get_spark``'s when run in-process), with every ``spark.sql.*`` tuning
-    key that the launch did not set applied at runtime. A key the launch
-    set is left as launched. The other tuning keys are static: a launch
-    without them runs without them, and ``conf_diff`` reports it."""
+    ``get_spark``'s when run in-process), with every tuning key that the
+    launch did not set and that a running session can change
+    (``spark.conf.isModifiable``) applied at runtime. A key the launch set
+    is left as launched. The other tuning keys are static (setting one at
+    runtime raises): a launch without them runs without them, and
+    ``conf_diff`` reports it."""
     spark = SparkSession.builder.getOrCreate()
     launched = spark.sparkContext.getConf()
     for k, v in TUNING_CONF.items():
-        if k.startswith("spark.sql.") and not launched.contains(k):
+        if spark.conf.isModifiable(k) and not launched.contains(k):
             spark.conf.set(k, v)
     return spark
 

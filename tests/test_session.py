@@ -49,8 +49,9 @@ def _last_record(stdout: str) -> dict:
 def test_spark_submit_cli_matches_in_process(spark, tmp_path, capsys, launch):
     """The deployment shape: ``cli.py dedup`` under spark-submit, with the
     package zip built by make_pyfiles.sh. Launched with ``submit_args`` it
-    runs the whole engine conf; launched bare, ``attach`` applies the SQL
-    tuning and ``conf_diff`` names the static keys that did not hold.
+    runs the whole engine conf; launched bare, ``attach`` applies the
+    runtime SQL tuning and ``conf_diff`` names the static keys that did not
+    hold.
     Either way the clusters equal an in-process run's. The launched JVM is
     sized small so it fits beside the test session's."""
     zip_path = tmp_path / "jdt_spark.zip"
@@ -91,9 +92,31 @@ def test_spark_submit_cli_matches_in_process(spark, tmp_path, capsys, launch):
         assert submitted["conf_diff"] == {}
     else:
         assert set(submitted["conf_diff"]) == {
-            k for k in session.TUNING_CONF if not k.startswith("spark.sql.")
+            k for k in session.TUNING_CONF if not spark.conf.isModifiable(k)
         }
     assert in_process["conf_diff"] == {}
     assert (submitted["docs"], submitted["clusters"]) == (
         in_process["docs"], in_process["clusters"]
     )
+
+
+def test_repeated_cli_run_reuses_generated_code(spark, tmp_path, capsys):
+    """The engine's plan set fits Spark's generated-class cache
+    (``spark.sql.codegen.cache.maxEntries``): a second run of the same
+    checkpointed ``dedup``, into a fresh store and output, reuses the
+    classes the first compiled. ``--substring`` runs every stage, ~141
+    classes; at Spark's default cache of 100 the LRU cycle makes the second
+    run recompile ~135 of them, and so would a per-run literal (a path, a
+    timestamp) baked into generated code. A repeat may still compile a few
+    classes (0-18 seen): AQE plans some stages differently from run to run,
+    as the order in which concurrent query stages finish changes the
+    codegen stage ids in class names and some join choices."""
+    records = []
+    for tag in ("first", "second"):
+        cli.main(["dedup", "--synth-n", "300", "--substring",
+                  "--output", str(tmp_path / f"{tag}_out"),
+                  "--checkpoint-dir", str(tmp_path / f"{tag}_ckpt")])
+        records.append(_last_record(capsys.readouterr().out))
+    first, second = records
+    assert second["codegen_compiles"] < 40, (first["codegen_compiles"], second)
+    assert (second["docs"], second["clusters"]) == (first["docs"], first["clusters"])
