@@ -114,14 +114,15 @@ TUNING_CONF: dict[str, str] = {
     # Generated-class cache (Janino compiles, keyed by the generated source;
     # default 100, LRU). A checkpointed benchmark op (1000 docs, --substring)
     # generates 138 distinct classes, so at 100 the LRU cycle missed on
-    # almost every lookup: every op after the first recompiled 129 classes
-    # (append: 67-69), and HotSpot ran each fresh class interpreted and
-    # JIT-compiled it again. At 1000 every later op compiles 0 on both
-    # benchmark workloads (measured at get_spark(cores=4) by the JVM's
-    # CodegenMetrics compile count), cutting checkpointed cpu_s ~20 %. One
-    # session running both workloads and their in-memory reference runs
-    # holds 287 classes, so 1000 is ~3.5x headroom. A static SQL conf: it
-    # must be on the launch.
+    # almost every lookup: every op after the first recompiled 116-133
+    # classes (append: 52-84), and HotSpot ran each fresh class interpreted
+    # and JIT-compiled it again. At 1000 a later op compiles 0 (a few AQE
+    # plan variants, 6-10 classes, now and then), measured at
+    # get_spark(cores=4) by the JVM's CodegenMetrics compile count; the
+    # checkpointed op's cpu_s fell 15 % (10/10 alternating pairs, 4-core
+    # host). One session running both benchmark workloads and their
+    # in-memory reference runs compiles 303 classes, so 1000 is ~3x
+    # headroom. A static SQL conf: it must be on the launch.
     "spark.sql.codegen.cache.maxEntries": "1000",
     # fork workers from a daemon that has already imported numpy/pandas/
     # pyarrow + the engine kernels (copy-on-write warm image) — removes the

@@ -51,9 +51,8 @@ def test_spark_submit_cli_matches_in_process(spark, tmp_path, capsys, launch):
     package zip built by make_pyfiles.sh. Launched with ``submit_args`` it
     runs the whole engine conf; launched bare, ``attach`` applies the
     runtime SQL tuning and ``conf_diff`` names the static keys that did not
-    hold.
-    Either way the clusters equal an in-process run's. The launched JVM is
-    sized small so it fits beside the test session's."""
+    hold. Either way the clusters equal an in-process run's. The launched
+    JVM is sized small so it fits beside the test session's."""
     zip_path = tmp_path / "jdt_spark.zip"
     subprocess.run(
         ["bash", str(REPO / "scripts" / "make_pyfiles.sh"), str(zip_path)],
@@ -106,11 +105,12 @@ def test_repeated_cli_run_reuses_generated_code(spark, tmp_path, capsys):
     checkpointed ``dedup``, into a fresh store and output, reuses the
     classes the first compiled. ``--substring`` runs every stage, ~141
     classes; at Spark's default cache of 100 the LRU cycle makes the second
-    run recompile ~135 of them, and so would a per-run literal (a path, a
-    timestamp) baked into generated code. A repeat may still compile a few
-    classes (0-18 seen): AQE plans some stages differently from run to run,
-    as the order in which concurrent query stages finish changes the
-    codegen stage ids in class names and some join choices."""
+    run recompile ~135 of them, and a per-run literal (a path, a timestamp)
+    baked into generated code would recompile every class holding it. A
+    repeat may still compile a few classes (0-18 seen): AQE plans some
+    stages differently from run to run, as the order in which concurrent
+    query stages finish changes the codegen stage ids in class names and
+    some join choices."""
     records = []
     for tag in ("first", "second"):
         cli.main(["dedup", "--synth-n", "300", "--substring",
