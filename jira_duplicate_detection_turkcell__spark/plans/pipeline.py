@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract import extract_docs
-from ..operators import exact, signatures, simhash, suffix, verify
+from ..operators import signatures, simhash, suffix, verify
 from ..operators.buckets import salted_bucket_pairs
 from ..operators.components import connected_components
 from ..sources.checkpoint import StageStore
@@ -43,13 +43,6 @@ class DedupConfig:
     hamming_max: int = 3
     # substring / suffix-array
     enable_substring: bool = False
-    # exact-dup collapse before near-dup (sign/pair representatives only;
-    # members rejoin as star edges). A pure optimization with identical
-    # clusters — worth it when the corpus has a substantial byte-identical
-    # fraction (real crawls: 30%+). The synthetic bench corpus is ~4%
-    # exact-dup, where the extra text materialization costs more than the
-    # signature/pair work it saves, so the default is off.
-    exact_collapse: bool = False
     substr_min_len: int = 48
     substr_sample: int = 1
     substr_bucket_cap: int = 200
@@ -76,42 +69,6 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     (2× the priciest kernel; see extract_docs docstring).
     """
     return extract_docs(pages)
-
-
-def exact_collapse(docs: DataFrame) -> DataFrame:
-    """docs(url, text) → membership(url, _rep, text): one representative
-    (min url) per byte-identical text.
-
-    Exact dedup BEFORE near-dup is the standard web-pipeline prefix and a
-    pure optimization here: byte-identical texts have identical shingle
-    sets, signatures and bucket keys, so the near-dup stage recomputed the
-    same signature per copy and every exact group of size g exploded into
-    C(g,2) identical candidate pairs in ~42 buckets each. Collapsing to
-    representatives removes that quadratic blowup; the g−1 ``rep→member``
-    star edges added back before clustering give exactly the clusters the
-    full graph would (copies share every neighbor of their representative).
-    md5 (128-bit) keys keep collision probability negligible at 10^12 docs
-    where a 64-bit hash would collide — the same scheme as the standalone
-    exact-dedup operator (operators/exact.py), whose hash + min-key
-    aggregation this reuses so the two can't diverge.
-    """
-    keyed = docs.withColumn("_rep_h", exact.content_hash("text"))
-    reps = exact.exact_dup_groups(docs, "text", "url").select(
-        F.col("text_hash").alias("_rep_h"), F.col("keep_id").alias("_rep")
-    )
-    return keyed.join(reps, "_rep_h").select("url", "_rep", "text")
-
-
-def rep_docs(membership: DataFrame) -> DataFrame:
-    return membership.where(F.col("url") == F.col("_rep")).select("url", "text")
-
-
-def exact_star_edges(membership: DataFrame) -> DataFrame:
-    """(key_l=rep, key_r=member) for every non-representative member —
-    distinct with key_l < key_r by construction (rep is the group min)."""
-    return membership.where(F.col("url") != F.col("_rep")).select(
-        F.col("_rep").alias("key_l"), F.col("url").alias("key_r")
-    )
 
 
 def signature_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -378,7 +335,7 @@ def run_dedup(
     def stage(name: str, build, metrics: dict | None = None) -> DataFrame:
         if store is None:
             # materialize each stage boundary so downstream consumers (several
-            # per stage, plus the CC iteration loop) don't re-execute the
+            # per stage, plus the CC rounds) don't re-execute the
             # expensive extraction/signature UDFs once per action. persist()
             # keeps the columnar cache format — profiling showed localCheckpoint
             # row-serialization dominated the whole pipeline on wide stages.
@@ -402,18 +359,9 @@ def run_dedup(
             temps.pop().unpersist()
 
     if store is not None:
-        # checkpointed mode: every stage is a durable commit (resumable).
-        # The exact-collapse membership is DERIVED (deterministic from the
-        # committed docs stage, cheap to recompute) rather than committed,
-        # so the stage layout is unchanged from the resume contract.
+        # checkpointed mode: every stage is a durable commit (resumable)
         docs = stage("docs", lambda: extract_stage(pages))
-        if cfg.exact_collapse:
-            membership = exact_collapse(docs)
-            sign_input = rep_docs(membership)
-        else:
-            membership = None
-            sign_input = docs
-        signed = stage("signatures", lambda: signature_stage(sign_input, cfg))
+        signed = stage("signatures", lambda: signature_stage(docs, cfg))
 
         edge_parts: list[DataFrame] = [
             stage("edges_minhash", lambda: minhash_edges(signed, cfg)[0])
@@ -430,14 +378,14 @@ def run_dedup(
             postings = stage(
                 "substr_postings",
                 lambda: suffix.substring_postings(
-                    sign_input, "text", "url", cfg.substr_min_len, cfg.substr_sample
+                    docs, "text", "url", cfg.substr_min_len, cfg.substr_sample
                 ),
             )
             edge_parts.append(
                 stage(
                     "edges_substring",
                     lambda: substring_edges(
-                        sign_input, cfg, postings=postings, temps=temps
+                        docs, cfg, postings=postings, temps=temps
                     ).select("key_l", "key_r"),
                 )
             )
@@ -446,8 +394,6 @@ def run_dedup(
         for e in edge_parts[1:]:
             edges = edges.union(e)
         edges = edges.distinct()
-        if membership is not None:
-            edges = edges.union(exact_star_edges(membership))
         clusters = stage(
             "clusters",
             lambda: connected_components(edges, docs, "url", edges_unique=True),
@@ -462,38 +408,21 @@ def run_dedup(
     # instead of two independent per-path subtrees; the returned edge list is
     # distinct in both modes (same edge-table semantics as checkpointed mode).
     docs = extract_stage(pages)
-    if cfg.exact_collapse:
-        # exact-dup collapse: sign/pair/verify representatives only; members
-        # rejoin as star edges before clustering (see exact_collapse)
-        membership = stage(
-            "exact_collapse", lambda: exact_collapse(docs).select("url", "_rep", "text")
-        )
-        sign_input = rep_docs(membership)
-        nodes = membership.select("url")
-    else:
-        membership = None
-        sign_input = docs
-        if cfg.enable_substring:
-            docs = sign_input = docs.persist()  # substring path re-reads text
-    signed = stage("signatures", lambda: signature_stage(sign_input, cfg))
-    if membership is None:
-        nodes = signed.select("url")
+    if cfg.enable_substring:
+        docs = docs.persist()  # substring path re-reads text
+    signed = stage("signatures", lambda: signature_stage(docs, cfg))
 
     edges_plan = fused_edges(signed, cfg)
     if cfg.enable_substring:
         edges_plan = edges_plan.union(
-            substring_edges(sign_input, cfg, temps=temps).select("key_l", "key_r")
+            substring_edges(docs, cfg, temps=temps).select("key_l", "key_r")
         ).distinct()
-    if membership is not None:
-        # rep→member star edges are disjoint from rep↔rep near-dup edges, so
-        # the union stays distinct with key_l < key_r
-        edges_plan = edges_plan.union(exact_star_edges(membership))
     edges = stage("edges", lambda: edges_plan)
     release_temps()  # edge stage persisted+counted → grouping pins are dead
 
     clusters = connected_components(
         edges,
-        nodes,
+        signed.select("url"),
         "url",
         nodes_unique=True,
         # the edge stage above persisted + counted the distinct l<r list —

@@ -161,17 +161,6 @@ def apply_append(
     one bounded job each, failing loudly like the CLI's other append
     guards.
     """
-    if cfg.exact_collapse:
-        # a run_dedup(exact_collapse=True) store commits REPRESENTATIVE-only
-        # signatures: clustering over that table here would silently drop
-        # every byte-duplicate member url from the clusters, and the
-        # disjointness guard below could not see member urls at all
-        raise ValueError(
-            "incremental append does not support exact_collapse state — the "
-            "signatures stage holds one representative per byte-identical "
-            "group, so appended clusters would lose the member urls; rebuild "
-            "with run_dedup, or run the base job with exact_collapse=False"
-        )
     new_docs = extract_stage(new_pages).localCheckpoint()
     new_signed = signature_stage(new_docs, cfg).localCheckpoint()
     intra_dups = (

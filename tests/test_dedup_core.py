@@ -230,7 +230,8 @@ def test_fused_edges_equal_union_of_per_path_edges(signed):
 
 @pytest.mark.parametrize("small_gate", [5_000_000, 0])
 def test_connected_components_hand_graphs(spark, small_gate):
-    # small_gate=5M → single-task union-find path; 0 → iterative propagation
+    # small_gate=5M → single-task union-find path; 0 → distributed
+    # large-star/small-star
     nodes = spark.createDataFrame([(k,) for k in "abcdefg"], "url string")
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("e", "f")], "key_l string, key_r string"
@@ -248,7 +249,7 @@ def test_connected_components_hand_graphs(spark, small_gate):
 
 @pytest.mark.parametrize("small_gate", [5_000_000, 0])
 def test_connected_components_chain(spark, small_gate):
-    # a chain stresses iteration count: 12 nodes in one line
+    # a chain stresses the round count: 12 nodes in one line
     keys = [f"n{i:02d}" for i in range(12)]
     nodes = spark.createDataFrame([(k,) for k in keys], "url string")
     edges = spark.createDataFrame(
@@ -260,24 +261,16 @@ def test_connected_components_chain(spark, small_gate):
     assert {r["cluster_id"] for r in got} == {"n00"}
 
 
-def test_connected_components_nonconvergence_detected(spark):
-    # a 100-hop chain on the distributed path with hops_per_round=1 and a
-    # small max_iter: silent non-convergence would split the component into
-    # several clusters. The loop must hand over to large-star/small-star
-    # and still produce the correct single component; enough propagation
-    # rounds also converge
+def test_connected_components_long_chain_distributed(spark):
+    # a 100-hop chain on the distributed path: an unconverged star edge set
+    # would split the component into several clusters, and hitting the
+    # round cap raises — the result must be the single component
     keys = [f"n{i:03d}" for i in range(101)]
     nodes = spark.createDataFrame([(k,) for k in keys], "url string")
     edges = spark.createDataFrame(
         list(zip(keys, keys[1:])), "key_l string, key_r string"
     )
-    via_star = components.connected_components(
-        edges, nodes, small_graph_edges=0, hops_per_round=1, max_iter=5
-    ).collect()
-    assert {r["cluster_id"] for r in via_star} == {"n000"}
-    got = components.connected_components(
-        edges, nodes, small_graph_edges=0, hops_per_round=4, max_iter=30
-    ).collect()
+    got = components.connected_components(edges, nodes, small_graph_edges=0).collect()
     assert {r["cluster_id"] for r in got} == {"n000"}
 
 
@@ -305,6 +298,22 @@ def test_star_components_matches_union_find_on_random_graphs(spark):
     for k, cid in got.items():
         assert want[k] == cid
     assert set(got) == {k for k in keys if any(k in p for p in pairs)}
+    assert len(want) > len(got)  # the graph has singletons
+
+    # the public distributed path, singletons included: once on a raw list
+    # holding reversed and duplicate pairs (normalized + distinct inside),
+    # once on the distinct key_l < key_r list with edges_unique=True (the
+    # opening normalize + distinct skipped)
+    ordered = sorted(pairs)
+    raw = ordered + [(b, a) for a, b in ordered[::3]] + ordered[::5]
+    for edge_rows, unique in ((raw, False), (ordered, True)):
+        dist = components.connected_components(
+            spark.createDataFrame(edge_rows, "key_l string, key_r string"),
+            nodes,
+            small_graph_edges=0,
+            edges_unique=unique,
+        )
+        assert {r["url"]: r["cluster_id"] for r in dist.collect()} == want
 
 
 def test_pipeline_end_to_end_recall(spark, pages, texts):
@@ -367,18 +376,6 @@ def test_mega_bucket_true_pairs_recovered_with_bounded_tasks(spark):
         (F.col("key_l") == "doc00000") & (F.col("key_r") == "doc01999")
     )
     assert probe.count() == 1
-
-
-def test_exact_collapse_identical_clusters(spark, pages):
-    # collapsing byte-identical texts to representatives must not change
-    # the final cluster assignment (copies inherit the rep's neighbors)
-    import dataclasses
-
-    base = P.run_dedup(spark, pages, CFG)
-    collapsed = P.run_dedup(spark, pages, dataclasses.replace(CFG, exact_collapse=True))
-    a = {r["url"]: r["cluster_id"] for r in base["clusters"].collect()}
-    b = {r["url"]: r["cluster_id"] for r in collapsed["clusters"].collect()}
-    assert a == b
 
 
 def test_generation_invariant_to_partitioning(spark):

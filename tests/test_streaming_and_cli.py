@@ -305,21 +305,6 @@ def test_append_refuses_intra_batch_duplicate_urls(spark):
         )
 
 
-def test_append_refuses_exact_collapse_state(spark):
-    """run_dedup(exact_collapse=True) commits representative-only
-    signatures; clustering an append over that table would silently drop
-    every byte-duplicate member url — apply_append must refuse loudly."""
-    import dataclasses
-
-    pdf = synth.generate_pages_pdf(24, seed=42)
-    cfg = dataclasses.replace(CFG, exact_collapse=True)
-    base = P.run_dedup(spark, spark.createDataFrame(pdf.iloc[:16]), cfg)
-    with pytest.raises(ValueError, match="exact_collapse"):
-        incremental.apply_append(
-            base["signatures"], base["edges"], spark.createDataFrame(pdf.iloc[16:]), cfg
-        )
-
-
 def test_salted_bipartite_pairs_identical_to_plain_join(spark):
     # planted hot bucket: 40 'all' members (8 of them new) in one bucket +
     # cold buckets; cap=5 salts both sides — pair set must equal the plain
