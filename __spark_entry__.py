@@ -73,7 +73,7 @@ _SIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _docs_with_signatures(spark, sf_dir):
-    """(url, shingles, minhash_sig, band_hashes, screen) via the one-pass
+    """(url, shingles, simhash, band_hashes, screen) via the one-pass
     numpy signing kernel (plans/pipeline.signature_stage) under
     ``_DRIVER_CFG``. doc_id is carried as a zero-padded string key so
     lexicographic key_l < key_r agrees with the numeric order the DuckDB

@@ -184,9 +184,15 @@ def text_sign_compute(
     shingle_kind: str = "word",
 ):
     """mapInPandas kernel: (url, text, …) batches → (url, shingles,
-    minhash_sig, simhash, band_hashes, screen). Pure numpy/pandas —
-    unit-testable without a JVM. Rows whose text is empty are dropped
-    (mirrors the ``length(text) > 0`` filter of the extract stage).
+    simhash, band_hashes, screen). Pure numpy/pandas — unit-testable
+    without a JVM. Rows whose text is empty are dropped (mirrors the
+    ``length(text) > 0`` filter of the extract stage).
+
+    The ``num_perm``-long MinHash signature is computed per batch but not
+    emitted: the band hashes and the screen sketch are derived from it
+    here, and no plan reads it after signing, so it never crosses the
+    Arrow boundary or lands in a committed stage. It is the MinHash of the
+    row's ``shingles`` under ``minhash._permutations(num_perm, seed)``.
 
     ``shingle_kind="word"`` grams are ``shingle_w`` consecutive tokens;
     ``"char"`` grams are ``shingle_w`` consecutive code points. A row with
@@ -281,7 +287,6 @@ def text_sign_compute(
                 {
                     "url": pdf["url"].to_numpy(),
                     "shingles": [gi[s:e] for s, e in zip(starts, ends)],
-                    "minhash_sig": list(sigs),
                     "simhash": sim,
                     "band_hashes": list(bh),
                     "screen": list(scr),
@@ -305,8 +310,8 @@ def _screen_from_sigs(sigs: np.ndarray, num_perm: int) -> np.ndarray:
 
 
 SIGN_SCHEMA = (
-    "url string, shingles array<long>, minhash_sig array<long>, "
-    "simhash long, band_hashes array<long>, screen array<long>"
+    "url string, shingles array<long>, simhash long, "
+    "band_hashes array<long>, screen array<long>"
 )
 
 
@@ -320,9 +325,8 @@ def sign_docs(
     rows: int = 4,
     shingle_kind: str = "word",
 ) -> DataFrame:
-    """docs(url, text) → (url, shingles, minhash_sig, simhash, band_hashes,
-    screen) in a single mapInPandas pass (no JVM array expressions, one
-    Arrow hop)."""
+    """docs(url, text) → (url, shingles, simhash, band_hashes, screen) in
+    a single mapInPandas pass (no JVM array expressions, one Arrow hop)."""
     kernel = text_sign_compute(
         shingle_w, num_perm, seed, with_simhash, bands, rows, shingle_kind
     )

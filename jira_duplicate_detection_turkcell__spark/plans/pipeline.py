@@ -58,7 +58,11 @@ class DedupConfig:
         )
 
     def fingerprint(self) -> str:
-        return hashlib.sha256(json.dumps(asdict(self), sort_keys=True).encode()).hexdigest()[:16]
+        """Config fields plus the signing kernel's output schema: a store
+        committed under another schema (or config) fails ``is_committed``,
+        so ``dedup`` rebuilds it and ``append`` refuses it."""
+        key = {**asdict(self), "sign_schema": signatures.SIGN_SCHEMA}
+        return hashlib.sha256(json.dumps(key, sort_keys=True).encode()).hexdigest()[:16]
 
 
 def extract_stage(pages: DataFrame) -> DataFrame:
@@ -72,11 +76,12 @@ def extract_stage(pages: DataFrame) -> DataFrame:
 
 
 def signature_stage(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """docs(url, text) → (url, shingles, minhash_sig, simhash, band_hashes,
-    screen) in one mapInPandas pass (operators/signatures.py) for either
-    shingle kind: tokenize/shingle/hash/sign/band entirely in numpy — no
-    interpreted JVM array expressions (profiled GC storm at high core
-    counts). ``simhash`` is all zeros when the kind is disabled."""
+    """docs(url, text) → (url, shingles, simhash, band_hashes, screen) in
+    one mapInPandas pass (operators/signatures.py) for either shingle kind:
+    tokenize/shingle/hash/sign/band entirely in numpy — no interpreted JVM
+    array expressions (profiled GC storm at high core counts). The MinHash
+    signature itself stays inside the kernel. ``simhash`` is all zeros
+    when the kind is disabled."""
     return signatures.sign_docs(
         docs,
         shingle_w=cfg.shingle_size,

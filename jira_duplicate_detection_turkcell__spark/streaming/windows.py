@@ -44,7 +44,7 @@ def windowed_event_counts(
 
 
 def streaming_signatures(pages_stream: DataFrame, cfg=None) -> DataFrame:
-    """pages stream → (url, minhash_sig[, simhash]) stream — the simhash
+    """pages stream → (url, band_hashes[, simhash]) stream — the simhash
     column is projected only when the config enables that kind.
 
     Signatures are per-row pure functions, so the streaming plan is identical
@@ -55,4 +55,4 @@ def streaming_signatures(pages_stream: DataFrame, cfg=None) -> DataFrame:
 
     cfg = cfg or DedupConfig()
     signed = signature_stage(extract_stage(pages_stream), cfg)
-    return signed.select("url", "minhash_sig", *(["simhash"] if cfg.enable_simhash else []))
+    return signed.select("url", "band_hashes", *(["simhash"] if cfg.enable_simhash else []))

@@ -69,9 +69,14 @@ def test_minhash_edges_match_bruteforce(signed, texts):
 def test_signature_determinism_across_partitioning(spark, docs):
     a = P.signature_stage(docs.repartition(2), CFG)
     b = P.signature_stage(docs.repartition(16), CFG)
-    rows_a = {r["url"]: (list(r["minhash_sig"]), r["simhash"]) for r in a.collect()}
-    rows_b = {r["url"]: (list(r["minhash_sig"]), r["simhash"]) for r in b.collect()}
-    assert rows_a == rows_b
+
+    def rows(df):
+        return {
+            r["url"]: (list(r["band_hashes"]), list(r["screen"]), r["simhash"])
+            for r in df.collect()
+        }
+
+    assert rows(a) == rows(b)
 
 
 def test_simhash_pairs_exact_for_small_hamming(signed):

@@ -32,6 +32,19 @@ def _random_case(rng, n_rows, max_len):
     return g, offsets
 
 
+def _signatures_of_shingles(shingles, num_perm=128, seed=7):
+    """(n, num_perm) int64 MinHash of each row's distinct gram hashes — the
+    signature the kernel derives its band hashes and screen from and does
+    not emit — via the kernel's own ``_minhash_blocked``."""
+    lengths = np.array([len(s) for s in shingles], dtype=np.int64)
+    g = np.concatenate(list(shingles)).view(np.uint64)
+    offsets = np.zeros(lengths.size, dtype=np.int64)
+    np.cumsum(lengths[:-1], out=offsets[1:])
+    a, b = _permutations(num_perm, seed)
+    hv_buf = np.empty(g.size, dtype=np.uint64)
+    return S._minhash_blocked(g, offsets, a, b, num_perm, hv_buf).view(np.int64)
+
+
 def test_blocked_minhash_equals_naive():
     rng = np.random.default_rng(11)
     a, b = _permutations(128, 7)
@@ -97,14 +110,19 @@ def test_text_sign_kernel_end_to_end_stability():
     a = run(3)
     b = run(40)
     assert list(a["url"]) == list(b["url"])
+    sig_a = _signatures_of_shingles(a["shingles"])
+    sig_b = _signatures_of_shingles(b["shingles"])
+    assert np.array_equal(sig_a, sig_b)
+    # the kernel's screen is the packed low bits of that same signature
+    assert np.array_equal(np.stack(a["screen"]), S._screen_from_sigs(sig_a, 128))
     for i in range(len(a)):
-        assert np.array_equal(a["minhash_sig"][i], b["minhash_sig"][i])
         assert a["simhash"][i] == b["simhash"][i]
         assert np.array_equal(a["band_hashes"][i], b["band_hashes"][i])
+        assert np.array_equal(a["screen"][i], b["screen"][i])
     # byte-identical texts → identical signatures
-    u0 = a[a["url"] == "u0"]["minhash_sig"].iloc[0]
-    u4 = a[a["url"] == "u4"]["minhash_sig"].iloc[0]
-    assert np.array_equal(u0, u4)
+    u0, u4 = (int(np.flatnonzero(a["url"] == u)[0]) for u in ("u0", "u4"))
+    assert np.array_equal(sig_a[u0], sig_a[u4])
+    assert np.array_equal(a["band_hashes"][u0], a["band_hashes"][u4])
 
 
 def test_char_kernel_grams_equal_python_substring_sets():

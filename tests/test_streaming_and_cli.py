@@ -52,7 +52,7 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
     batch_pages = spark.read.parquet(str(src))
 
     expected = {
-        r["url"]: (list(r["minhash_sig"]), r["simhash"])
+        r["url"]: (list(r["band_hashes"]), r["simhash"])
         for r in windows.streaming_signatures(batch_pages, CFG).collect()
     }
     stream = spark.readStream.schema(batch_pages.schema).parquet(str(src))
@@ -66,7 +66,7 @@ def test_streaming_signatures_match_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     got = {
-        r["url"]: (list(r["minhash_sig"]), r["simhash"])
+        r["url"]: (list(r["band_hashes"]), r["simhash"])
         for r in spark.sql("SELECT * FROM sigs").collect()
     }
     assert got == expected
@@ -79,11 +79,11 @@ def test_streaming_signatures_char_shingles_without_simhash(spark):
     pages = spark.createDataFrame(synth.generate_pages_pdf(8, seed=42))
     cfg = P.DedupConfig(shingle_kind="char", enable_simhash=False)
     out = windows.streaming_signatures(pages, cfg)
-    assert out.columns == ["url", "minhash_sig"]
+    assert out.columns == ["url", "band_hashes"]
     assert out.count() == 8
     # and the simhash column is still present whenever the kind is enabled
     with_sh = windows.streaming_signatures(pages, P.DedupConfig(shingle_kind="char"))
-    assert with_sh.columns == ["url", "minhash_sig", "simhash"]
+    assert with_sh.columns == ["url", "band_hashes", "simhash"]
 
 
 @pytest.mark.parametrize(
@@ -362,6 +362,31 @@ def _assert_record_counts_output(spark, capsys, output) -> None:
     assert record["dup_docs"] == record["docs"] - record["clusters"]
 
 
+# the signatures stage commits exactly the columns a shipped plan reads:
+# shingles (exact Jaccard), simhash (Hamming), band_hashes (buckets) and
+# screen (the inline MinHash agreement screen)
+SIGNATURE_COLUMNS = ["url", "shingles", "simhash", "band_hashes", "screen"]
+
+
+def _assert_signatures_columns(ckpt: Path) -> None:
+    """The committed signatures stage after an append: its manifest schema
+    and every segment's parquet files, base and appended alike, hold
+    SIGNATURE_COLUMNS."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DataType
+
+    from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
+
+    manifest = StageStore(ckpt).manifest("signatures")
+    assert manifest.segments == ["data", "data-g1"]
+    assert DataType.fromDDL(manifest.schema_ddl).names == SIGNATURE_COLUMNS
+    for segment in manifest.segments:
+        files = sorted((ckpt / "signatures" / segment).glob("part-*.parquet"))
+        assert files, segment
+        for f in files:
+            assert pq.read_schema(f).names == SIGNATURE_COLUMNS, f
+
+
 def test_cli_append_in_process(spark, tmp_path, capsys):
     """dedup batch 1 (checkpointed) → append batch 2 → clusters must equal
     one full dedup over the whole corpus, with every edge kind enabled and
@@ -401,6 +426,55 @@ def test_cli_append_in_process(spark, tmp_path, capsys):
     # a signature kind and the substring kind must not commit twice
     edges = store.load(spark, "edges")
     assert edges.count() == edges.distinct().count()
+    _assert_signatures_columns(ckpt)
+
+
+def test_fingerprint_covers_sign_schema(spark, tmp_path, monkeypatch):
+    """A store committed under another signing schema is not reused: append
+    refuses it with the missing-stage message, and dedup rebuilds it."""
+    from dataclasses import asdict, replace
+
+    from jira_duplicate_detection_turkcell__spark import cli
+    from jira_duplicate_detection_turkcell__spark.operators import signatures
+    from jira_duplicate_detection_turkcell__spark.sources.checkpoint import StageStore
+
+    cfg = P.DedupConfig()
+    # the schema with one more column, as when the stage also committed the
+    # raw MinHash signature
+    old_schema = signatures.SIGN_SCHEMA.replace(
+        "shingles array<long>,", "shingles array<long>, signature array<long>,"
+    )
+    with monkeypatch.context() as m:
+        m.setattr(signatures, "SIGN_SCHEMA", old_schema)
+        old_fp = cfg.fingerprint()
+        old_ddl = spark.createDataFrame([], old_schema).schema.simpleString()
+    assert old_fp != cfg.fingerprint()
+
+    ckpt = tmp_path / "state"
+    base = ["--synth-n", "48", "--synth-total", "64"]
+    cli.main(["dedup", *base, "--output", str(tmp_path / "c1"),
+              "--checkpoint-dir", str(ckpt)])
+    # relabel the committed store as one built under the old schema
+    store = StageStore(ckpt)
+    for mp in ckpt.glob("*/MANIFEST.json"):
+        manifest = replace(store.manifest(mp.parent.name), config_fingerprint=old_fp)
+        if manifest.stage == "signatures":
+            manifest = replace(manifest, schema_ddl=old_ddl)
+        mp.write_text(json.dumps(asdict(manifest)))
+
+    append = ["append", "--synth-n", "16", "--synth-start", "48",
+              "--synth-total", "64", "--output", str(tmp_path / "c2"),
+              "--state-dir", str(ckpt)]
+    with pytest.raises(SystemExit, match="missing from .* or was built with a different config"):
+        cli.main(append)
+
+    cli.main(["dedup", *base, "--output", str(tmp_path / "c1"),
+              "--checkpoint-dir", str(ckpt)])
+    rebuilt = StageStore(ckpt).manifest("signatures")
+    assert rebuilt.config_fingerprint == cfg.fingerprint()
+    assert rebuilt.schema_ddl != old_ddl
+    cli.main(append)  # the rebuilt store accepts the append
+    _assert_signatures_columns(ckpt)
 
 
 def test_cli_rejects_non_positive_synth_n(tmp_path):
