@@ -228,7 +228,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # but deliberately NOT the full pair enumeration this oracle checks.
         return suffix.substring_edges(
             docs, "text", "url", SUBSTR_LEN, max_group_docs=1_000_000_000
-        ).select("key_l", "key_r").distinct()
+        ).distinct()
 
     def q_dedup_clusters(spark, sf_dir):
         pairs = _minhash_verified_pairs(spark, sf_dir)
@@ -239,10 +239,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the incremental-append construction, oracle-checked: treat odd
         # doc_ids as an appended batch. Pairs = (old×old via the fused
         # bucket self-join) ∪ (new-touching via the SALTED BIPARTITE
-        # new×all bucket join — the SAME candidate-generation function the
-        # shipping path calls, streaming/incremental.new_all_candidate_pairs,
-        # so the oracle-proven construction and apply_append's code path
-        # cannot drift); exact Jaccard verification, then CC. Append ≡
+        # new×all bucket join — streaming/incremental.new_all_candidate_pairs,
+        # the SAME candidate-generation call apply_append makes inline, so the
+        # oracle-proven construction and the shipping append path cannot
+        # drift); exact Jaccard verification, then CC. Append ≡
         # rebuild means the clusters must equal the full-batch
         # dedup_clusters oracle (same recursive-CTE SQL) — the driver gate
         # for the incremental path.

@@ -9,7 +9,7 @@ the same raw input. tests/test_extract.py enforces that by importing the
 reference module as the oracle and diffing outputs over an adversarial corpus.
 
 Everything here is a pure function of its input string; the Spark surface is
-a single vectorized pandas UDF (`extract_text_udf`) so the whole contract
+a single ``mapInPandas`` pass (`extract_docs`) so the whole contract
 lives in one Python codepath — Python ``str.lower`` / ``unicodedata`` / ``re``
 semantics differ subtly from Spark SQL string functions (e.g. Turkish İ → i̇),
 so no step is translated to SQL expressions (SURVEY.md §7.5).
@@ -353,31 +353,20 @@ def _series_extract(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-def register_udfs():
-    """Build the pandas UDFs lazily (keeps this module importable without a
-    JVM for pure-Python unit tests)."""
+def clean_description_udf():
+    """Build the ``clean_description`` pandas UDF lazily (keeps this module
+    importable without a JVM for pure-Python unit tests)."""
     from pyspark.sql.functions import pandas_udf
 
-    extract_text_udf = pandas_udf(_series_extract, "string")
-    clean_description_udf = pandas_udf(
+    return pandas_udf(
         lambda s: s.map(lambda v: clean_description(v) if v is not None else ""), "string"
     )
-    clean_summary_udf = pandas_udf(
-        lambda s: s.map(lambda v: clean_summary(v) if v is not None else ""), "string"
-    )
-    return extract_text_udf, clean_description_udf, clean_summary_udf
-
-
-def extract_pages(pages_df, html_col: str = "html", out_col: str = "text"):
-    """pages(url, warc_ts, html, …) → same + byte-exact `text` column."""
-    extract_text_udf, _, _ = register_udfs()
-    return pages_df.withColumn(out_col, extract_text_udf(pages_df[html_col]))
 
 
 def extract_docs(pages_df, url_col: str = "url", html_col: str = "html"):
     """pages → docs(url, text), empty docs dropped — ONE Python pass.
 
-    The pandas-UDF formulation (`extract_pages` + ``filter(length(text) >
+    A pandas-UDF formulation (``withColumn`` + ``filter(length(text) >
     0)``) plans as TWO ArrowEvalPython nodes: Catalyst pushes the filter
     between the UDF's two use sites (predicate and projection) and
     re-evaluates the extractor per site — doubling the most expensive

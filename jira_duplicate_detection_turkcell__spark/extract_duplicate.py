@@ -32,14 +32,11 @@ import re
 import unicodedata
 from urllib.parse import unquote, urlparse
 
-import pandas as pd
-
 from .extract import (
     RE_SEMVER_INNER_WS,
     _URL_TRAILING_PUNCT,
     collapse_inline_whitespace,
     fix_permission_spacing,
-    mask_pii as _jira_mask_pii,  # noqa: F401  (kept for API symmetry)
     normalize_linebreaks,
     normalize_semver_in_text,
     standardize_metadata_keys,
@@ -190,18 +187,3 @@ def normalize_semver_column_duplicate(version: str) -> str:
         return ""
     version = re.sub(r"^v\s*", "", version.strip())
     return RE_SEMVER_INNER_WS.sub(".", version).strip()
-
-
-def register_duplicate_udfs():
-    """Vectorized pandas UDFs for the variant cleaners (lazy JVM import)."""
-    from pyspark.sql.functions import pandas_udf
-
-    clean_description_duplicate_udf = pandas_udf(
-        lambda s: s.map(lambda v: clean_description_duplicate(v) if v is not None else ""),
-        "string",
-    )
-    clean_summary_duplicate_udf = pandas_udf(
-        lambda s: s.map(lambda v: clean_summary_duplicate(v) if v is not None else ""),
-        "string",
-    )
-    return clean_description_duplicate_udf, clean_summary_duplicate_udf

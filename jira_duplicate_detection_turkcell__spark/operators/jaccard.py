@@ -41,7 +41,6 @@ def ngram_jaccard_pairs(
     threshold_num: int = 1,
     threshold_den: int = 2,
     max_posting_size: int | None = 64,
-    temps: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(id_l, id_r, n_common, sz_l, sz_r) for pairs with
     Jaccard ≥ threshold_num/threshold_den (exact, integer arithmetic).
@@ -50,8 +49,6 @@ def ngram_jaccard_pairs(
     postings (exact at every value — see module docstring). The guard
     defaults ON; ``None`` is the explicit opt-out that runs the plain
     unsalted inverted-index self-join (scale-unsafe on skewed postings).
-    ``temps`` collects the gram-table persist for callers that materialize
-    the result and can release it (the pattern run_dedup uses).
     """
     grams = docs.select(
         F.col(id_col).alias("gid"),
@@ -60,10 +57,12 @@ def ngram_jaccard_pairs(
     # the gram table feeds FOUR consumers (hot-bucket sizing, both salted
     # join sides, the set-size aggregate — three in the unsalted plan);
     # materialize the string-gram explode once instead of re-running it per
-    # consumer (measured at sf0.1: min-of-3 7.6 → 5.2 s salted)
-    grams = grams.persist()
-    if temps is not None:
-        temps.append(grams)
+    # consumer (measured at sf0.1: min-of-3 7.6 → 5.2 s salted).
+    # localCheckpoint, not persist: the blocks stay out of the session's
+    # cache registry and are freed once the returned plan is unreachable,
+    # so a bare call pins nothing for the session's lifetime (the explode
+    # runs eagerly, as one job inside this call)
+    grams = grams.localCheckpoint()
     set_sizes = grams.groupBy("gid").agg(F.count(F.lit(1)).alias("sz"))
 
     if max_posting_size is not None:

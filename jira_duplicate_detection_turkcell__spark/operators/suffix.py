@@ -13,9 +13,9 @@ detection. Two cooperating mechanisms:
 
 2. **Per-partition suffix array (the exact verifier).** Inside
    ``applyInPandas`` over fingerprint-bucketed groups, a numpy prefix-doubling
-   suffix array + Kasai LCP over the concatenated member texts emits, for
-   every adjacent cross-document suffix pair, the exact shared-substring
-   length; pairs with LCP ≥ L become verified edges. Exactness is scoped to
+   suffix array + Kasai LCP over the concatenated member texts finds the
+   maximal runs of adjacent LCP ≥ L; every pair of documents with suffixes
+   in one run becomes a verified (key_l, key_r) edge. Exactness is scoped to
    within a bucket-group — the fingerprint join is what brings substring-
    sharing docs into the same group across partitions (SURVEY.md §7.5
    boundary contract).
@@ -37,10 +37,9 @@ def fingerprints(text, length: int = 32, sample: int = 1):
     Texts shorter than ``length`` yield an EMPTY array, not the
     ``char_shingles`` whole-text fallback: a fingerprint here certifies a
     shared run of ≥ ``length`` chars (the certificate branch of
-    ``_grouped_verify`` stamps ``span_len = length`` on edges derived from
-    it), and a doc shorter than ``length`` cannot contain one — the
-    fallback hash would let two identical short docs assert an impossible
-    span."""
+    ``_grouped_verify`` emits an edge from each shared fingerprint), and a
+    doc shorter than ``length`` cannot contain one — the fallback hash
+    would let two identical short docs assert an edge with no such run."""
     sh = F.when(
         F.length(text) >= length, char_shingles(text, length)
     ).otherwise(F.array().cast("array<long>"))
@@ -184,52 +183,19 @@ def lcp_array(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
     return np.asarray(lcp, dtype=np.int64)
 
 
-def _pair_lcs(
-    owner: np.ndarray,
-    sa: np.ndarray,
-    lcp: np.ndarray,
-    a: int,
-    b: int,
-) -> int:
-    """Exact longest-common-substring length of docs a and b inside one
-    group's generalized suffix array.
-
-    Classic reduction: restrict the SA to suffixes owned by a or b; the
-    pair's LCS is the max over consecutive restricted entries with
-    DIFFERENT owners of the range-min LCP between their ranks. The range
-    mins come from one ``np.minimum.reduceat`` over the lcp array (O(L)
-    per pair, no sparse table).
-    """
-    own = owner[sa]
-    ranks = np.flatnonzero((own == a) | (own == b))
-    if ranks.size < 2:
-        return 0
-    cross = own[ranks[:-1]] != own[ranks[1:]]
-    if not cross.any():
-        return 0
-    # min lcp[ranks[i] : ranks[i+1]] per consecutive restricted pair.
-    # reduceat's LAST segment runs to the end of lcp, not to ranks[-1] —
-    # recompute it over the intended window
-    seg_min = np.minimum.reduceat(lcp, ranks[:-1])
-    seg_min[-1] = lcp[ranks[-2] : ranks[-1]].min()
-    return int(seg_min[cross].max())
-
-
-def _group_spans(pdf: pd.DataFrame, min_len: int, exact_lcs: bool = False) -> pd.DataFrame:
+def _group_spans(pdf: pd.DataFrame, min_len: int) -> pd.DataFrame:
     """Exact shared-substring pairs within one group of docs.
 
     Concatenate member texts with unique negative separators, build the
     suffix array + Kasai LCP, and scan the *maximal runs* of adjacent
     LCP ≥ min_len. All suffixes of one run share a prefix of length
-    ≥ run-min LCP, so every pair of distinct docs appearing in the run
+    ≥ min_len, so every pair of distinct docs appearing in the run
     shares a substring that long — and conversely, any two docs sharing an
     L-gram have their suffixes contiguous in SA order, i.e. land in one
     run. Emitting all distinct-owner pairs per run is therefore *exactly*
     the docs-sharing-an-L-gram relation, for any number of docs per group
     (pairwise adjacency alone would miss pairs separated by a third doc's
-    suffixes inside the run). ``span_len`` is the max over runs of the
-    run-min LCP — a guaranteed shared-substring length (≥ min_len; not
-    necessarily the longest common substring of the pair).
+    suffixes inside the run).
     """
     # object dtype for the key columns: the group key type follows the
     # caller's key column (string urls, long doc_ids, …) — Arrow casts the
@@ -238,7 +204,6 @@ def _group_spans(pdf: pd.DataFrame, min_len: int, exact_lcs: bool = False) -> pd
         {
             "key_l": pd.Series(dtype=object),
             "key_r": pd.Series(dtype=object),
-            "span_len": pd.Series(dtype="int64"),
         }
     )
     keys = pdf["url"].tolist()
@@ -258,7 +223,9 @@ def _group_spans(pdf: pd.DataFrame, min_len: int, exact_lcs: bool = False) -> pd
     if lcp.size == 0:
         return empty
 
-    rows: dict[tuple[str, str], int] = {}
+    # insertion-ordered set of pairs: a pair can recur across runs, and the
+    # output row order stays deterministic
+    rows: dict[tuple[str, str], None] = {}
     mask = lcp >= min_len
     # maximal runs of consecutive True in mask: lcp[i..j] all ≥ min_len
     # covers suffix positions sa[i..j+1]
@@ -268,7 +235,6 @@ def _group_spans(pdf: pd.DataFrame, min_len: int, exact_lcs: bool = False) -> pd
         uniq = np.unique(os_)
         if uniq.size < 2:
             continue
-        span = int(lcp[s:e].min())
         for ai in range(uniq.size):
             for bi in range(ai + 1, uniq.size):
                 a, b = uniq[ai], uniq[bi]
@@ -280,25 +246,10 @@ def _group_spans(pdf: pd.DataFrame, min_len: int, exact_lcs: bool = False) -> pd
                 ka, kb = (
                     (keys[a], keys[b]) if keys[a] < keys[b] else (keys[b], keys[a])
                 )
-                if span > rows.get((ka, kb), 0):
-                    rows[(ka, kb)] = span
+                rows[(ka, kb)] = None
     if not rows:
         return empty
-    if exact_lcs:
-        # upgrade each emitted pair's guaranteed span to its TRUE longest
-        # common substring (pair set unchanged — membership was already
-        # exact); opt-in because it costs O(L) per pair
-        idx = {k: i for i, k in enumerate(keys)}
-        for ka, kb in list(rows):
-            rows[(ka, kb)] = _pair_lcs(owner, sa, lcp, idx[ka], idx[kb])
-    ks = list(rows)
-    return pd.DataFrame(
-        {
-            "key_l": [k[0] for k in ks],
-            "key_r": [k[1] for k in ks],
-            "span_len": [rows[k] for k in ks],
-        }
-    )
+    return pd.DataFrame(list(rows), columns=["key_l", "key_r"])
 
 
 def _star_edges(fps: "DataFrame", key_col: str) -> "DataFrame":
@@ -333,15 +284,12 @@ def substring_edges(
     max_bucket_size: int = 200,
     max_group_docs: int = 256,
     postings: DataFrame | None = None,
-    exact_lcs: bool = False,
     temps: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Verified exact-shared-substring edges (key_l, key_r, span_len).
+    """Verified exact-shared-substring edges (key_l, key_r) — the same
+    schema as every other edge kind.
     Pass ``postings`` (a committed ``substring_postings`` stage) to skip
-    re-fingerprinting ``docs``. ``exact_lcs=True`` makes span_len the TRUE
-    pairwise longest-common-substring length for SA-verified groups
-    (opt-in — O(L) extra per pair; certificate edges keep the min_len
-    lower bound). ``temps`` collects every DataFrame this call persists —
+    re-fingerprinting ``docs``. ``temps`` collects every DataFrame this call persists —
     callers that materialize the result (a stage commit, a bench count)
     should unpersist them afterwards or the pins outlive their use for the
     session's lifetime.
@@ -353,8 +301,8 @@ def substring_edges(
     Components larger than ``max_group_docs`` (boilerplate near-cliques,
     whose true pair set is Ω(n²) by construction) emit a spanning
     CERTIFICATE of true edges instead — per-fingerprint star edges, O(n)
-    rows with identical connected components and ``span_len = min_len``
-    lower bounds — see the inline comment at the oversized branch.
+    rows with identical connected components — see the inline comment at
+    the oversized branch.
 
     Grouping is built from linear STAR EDGES, not pairwise co-occurrence:
     every fingerprint contributes (min member → member) edges, whose
@@ -367,10 +315,7 @@ def substring_edges(
     candidate-pair restriction is needed. With ``sample > 1`` fingerprints
     under-nominate by design (recall contract in the module docstring) and
     the output is restricted to nominated pairs, preserving round-2
-    semantics. ``span_len`` is a guaranteed shared-substring length — the
-    max over SA runs of the run-min LCP, ≥ min_len but NOT necessarily the
-    pair's longest common substring (changed from the round-1 per-pair
-    adjacent-LCP max).
+    semantics.
 
     Note the grouping component labels must NEVER seed a downstream
     clustering as pre-merged labels: with winnowed nomination (k =
@@ -419,7 +364,7 @@ def substring_edges(
 
     return _grouped_verify(
         grouping_edges, slim, key_col, text_col, min_len, sample,
-        max_group_docs, pairs, exact_lcs, temps=temps,
+        max_group_docs, pairs, temps=temps,
     )
 
 
@@ -432,20 +377,16 @@ def _grouped_verify(
     sample: int,
     max_group_docs: int,
     pairs: DataFrame | None,
-    exact_lcs: bool = False,
     temps: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """Nomination graph → verified substring edges (key_l, key_r, span_len).
+    """Nomination graph → verified substring edges (key_l, key_r).
 
     Shared tail of the batch (`substring_edges`) and incremental
     (`incremental_substring_edges`) paths: connected-components-group the
     nomination edges, run one suffix array per small group (each member's
     text shipped once), and emit spanning-certificate star edges for
     oversized near-clique components. ``pairs`` (sampled mode only)
-    restricts small-group output to nominated pairs. ``exact_lcs`` upgrades
-    small-group span_len to the true pairwise LCS (certificate edges stay
-    min_len lower bounds — their whole point is to avoid per-pair work).
-    ``temps`` collects the persists this function pins, for callers that
+    restricts small-group output to nominated pairs. ``temps`` collects the persists this function pins, for callers that
     materialize the result internally and can release them.
     """
     from .components import connected_components
@@ -473,13 +414,13 @@ def _grouped_verify(
     )
 
     def verify_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _group_spans(pdf, min_len, exact_lcs)
+        return _group_spans(pdf, min_len)
 
     # schema follows the caller's key type (string urls, long doc_ids, …) —
     # a hard-coded string schema crashed long-keyed callers at Arrow time
     key_dt = dict(slim.dtypes)[key_col]
     small_edges = small.groupBy("cluster_id").applyInPandas(
-        verify_group, f"key_l {key_dt}, key_r {key_dt}, span_len long"
+        verify_group, f"key_l {key_dt}, key_r {key_dt}"
     )
     if pairs is not None:
         # sampled fingerprints: the group SA emits every pair sharing an
@@ -500,8 +441,7 @@ def _grouped_verify(
     # fingerprints. Sharing a min_len-gram hash IS the certificate of a
     # shared min_len-char substring (modulo 64-bit collision — the same
     # trust already placed in every hashed-shingle comparison here), so
-    # every emitted edge is a true substring edge with span_len ≥ min_len,
-    # and every true pair shares ≥ 1 such fingerprint, making the star
+    # every emitted edge is a true substring edge, and every true pair shares ≥ 1 such fingerprint, making the star
     # graph's connected components EQUAL to the true pair graph's. O(n)
     # edges, O(postings) work. Small components keep full SA-verified
     # pair output; only oversized ones degrade to the certificate, which
@@ -520,10 +460,7 @@ def _grouped_verify(
             F.array_distinct(fingerprints(F.col(text_col), min_len, sample))
         ).alias("fp"),
     )
-    big_edges = _star_edges(cert_fps, key_col).withColumn(
-        "span_len", F.lit(min_len).cast("long")
-    )
-    return small_edges.unionByName(big_edges)
+    return small_edges.unionByName(_star_edges(cert_fps, key_col))
 
 
 def incremental_substring_edges(
@@ -570,7 +507,7 @@ def incremental_substring_edges(
     salted, bounded cells, zero drops.
 
     Oversized touched components emit the same spanning-certificate star
-    edges as batch (true edges, span_len = min_len lower bound). All exact-
+    edges as batch (true edges). All exact-
     mode output is then restricted to new-touching pairs: old×old rows —
     SA re-derivations or certificate edges alike — are true pairs, hence
     already connected in the existing edge state (every certificate edge
@@ -625,7 +562,7 @@ def incremental_substring_edges(
         edges.join(F.broadcast(flag_l), "key_l", "left")
         .join(F.broadcast(flag_r), "key_r", "left")
         .where(F.col("_nl") | F.col("_nr"))
-        .select("key_l", "key_r", "span_len")
+        .select("key_l", "key_r")
     )
     # materialize the (small) edge delta, then release every intermediate
     # this call pinned — chained appends must not accumulate cached state

@@ -25,16 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .signatures import _fmix64
+
 _B = np.uint64(0x100000001B3)  # odd ⇒ invertible mod 2^64 (FNV prime)
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))
-
-
-def _fmix64(h: np.ndarray) -> np.ndarray:
-    h = h ^ (h >> np.uint64(33))
-    h = h * np.uint64(0xC2B2AE3D27D4EB4F)
-    h = h ^ (h >> np.uint64(29))
-    h = h * np.uint64(0x165667B19E3779F9)
-    return h ^ (h >> np.uint64(32))
 
 
 def winnow_kernel(k: int = 8, window: int = 4):

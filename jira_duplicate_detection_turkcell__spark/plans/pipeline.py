@@ -391,7 +391,7 @@ def run_dedup(
                     "edges_substring",
                     lambda: substring_edges(
                         docs, cfg, postings=postings, temps=temps
-                    ).select("key_l", "key_r"),
+                    ),
                 )
             )
             release_temps()  # stage committed → grouping-graph pins are dead
@@ -420,7 +420,7 @@ def run_dedup(
     edges_plan = fused_edges(signed, cfg)
     if cfg.enable_substring:
         edges_plan = edges_plan.union(
-            substring_edges(docs, cfg, temps=temps).select("key_l", "key_r")
+            substring_edges(docs, cfg, temps=temps)
         ).distinct()
     edges = stage("edges", lambda: edges_plan)
     release_temps()  # edge stage persisted+counted → grouping pins are dead

@@ -248,10 +248,3 @@ def conf_diff(spark: SparkSession) -> dict[str, str | None]:
         if got != want and not java_opts_hold:
             diff[k] = got
     return diff
-
-
-def stop_spark() -> None:
-    """Stop the active session (used between bench parallelism levels)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

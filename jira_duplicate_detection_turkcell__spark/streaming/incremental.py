@@ -55,11 +55,6 @@ from ..plans.pipeline import (
 )
 
 
-def sign_new_batch(new_pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Extract + sign only the appended pages."""
-    return signature_stage(extract_stage(new_pages), cfg)
-
-
 def new_all_candidate_pairs(
     buckets_new: DataFrame,
     buckets_all: DataFrame,
@@ -72,7 +67,7 @@ def new_all_candidate_pairs(
     """THE candidate-generation step of an append: new-side bucket rows ×
     (existing ∪ new) bucket rows, both sides salted, exactly-once pairs.
 
-    One named function shared by the shipping path (``incremental_edges``,
+    One named function shared by the shipping path (``apply_append``,
     below) and the driver's oracle-gated ``incremental_clusters`` query
     (``__spark_entry__.py``) — the oracle there proves append ≡ rebuild for
     *this construction*, so routing both callers through it keeps the
@@ -88,48 +83,6 @@ def new_all_candidate_pairs(
         out_bucket_cols=out_bucket_cols,
     )
     return pairs
-
-
-def incremental_edges(
-    existing_signed: DataFrame,
-    new_signed: DataFrame,
-    cfg: DedupConfig,
-    substring_handled: bool = False,
-) -> DataFrame:
-    """Verified SIGNATURE-kind edges touching at least one new doc.
-
-    The new side's bucket rows (bands + simhash chunk-pair keys) are joined
-    against the bucket rows of (existing ∪ new); the existing×existing
-    quadrant is never recomputed. Skew posture matches the batch path: hot
-    buckets are salted into bounded bipartite cells, never dropped.
-
-    The substring edge kind lives outside the signature table (its state is
-    the fingerprint postings) and is maintained by ``apply_append`` via
-    ``suffix.incremental_substring_edges``; calling this function alone
-    under ``enable_substring`` raises unless the caller asserts it combines
-    the kinds itself (``substring_handled=True``) — silent partial
-    maintenance is the round-2 bug class this guard exists to prevent.
-    """
-    if cfg.enable_substring and not substring_handled:
-        raise ValueError(
-            "incremental_edges maintains only the signature edge kinds; "
-            "with enable_substring use apply_append (which also runs "
-            "incremental_substring_edges), or pass substring_handled=True "
-            "if you union the substring edges yourself"
-        )
-    all_signed = existing_signed.select(*new_signed.columns).unionByName(new_signed)
-    buckets_all, carry = fused_bucket_table(all_signed, cfg)
-    buckets_new, _ = fused_bucket_table(new_signed, cfg)
-    pairs = new_all_candidate_pairs(
-        buckets_new,
-        buckets_all,
-        ["bkind", "bid", "bkey"],
-        "nid",
-        cfg.minhash_bucket_cap,
-        carry_cols=carry,
-        out_bucket_cols=["bkind"],
-    )
-    return verify_fused_pairs(pairs, all_signed, cfg)
 
 
 def apply_append(
@@ -190,9 +143,23 @@ def apply_append(
             "re-appending a url would duplicate its state rows (an update/"
             "upsert is a rebuild, not an append)"
         )
-    new_edges = incremental_edges(
-        existing_signed, new_signed, cfg, substring_handled=cfg.enable_substring
-    ).select("key_l", "key_r")
+    # signature-kind edges touching at least one new doc: the new side's
+    # bucket rows (bands + simhash chunk-pair keys) joined against the
+    # bucket rows of (existing ∪ new); the existing×existing quadrant is
+    # never recomputed, and hot buckets are salted, never dropped
+    signed = existing_signed.select(*new_signed.columns).unionByName(new_signed)
+    buckets_all, carry = fused_bucket_table(signed, cfg)
+    buckets_new, _ = fused_bucket_table(new_signed, cfg)
+    pairs = new_all_candidate_pairs(
+        buckets_new,
+        buckets_all,
+        ["bkind", "bid", "bkey"],
+        "nid",
+        cfg.minhash_bucket_cap,
+        carry_cols=carry,
+        out_bucket_cols=["bkind"],
+    )
+    new_edges = verify_fused_pairs(pairs, signed, cfg)
 
     all_docs = postings = new_postings = None
     if existing_docs is not None:
@@ -231,12 +198,9 @@ def apply_append(
         # kind; the union must be distinct'd or the duplicate row is
         # committed permanently into the edges segment (the signature kinds
         # alone are already distinct — verify_fused_pairs ends in distinct)
-        new_edges = new_edges.unionByName(
-            sub_edges.select("key_l", "key_r")
-        ).distinct()
+        new_edges = new_edges.unionByName(sub_edges).distinct()
 
     new_edges = new_edges.localCheckpoint()
-    signed = existing_signed.select(*new_signed.columns).unionByName(new_signed)
     edges = existing_edges.select("key_l", "key_r").unionByName(new_edges).distinct()
     clusters = connected_components(edges, signed.select("url"), "url")
     out = {

@@ -116,56 +116,11 @@ def test_substring_group_verification_emits_transitive_pairs(spark):
     assert got == {("a", "b"), ("a", "c"), ("b", "c")}
 
 
-def test_substring_exact_lcs_matches_bruteforce(spark):
-    """exact_lcs=True: span_len equals the TRUE pairwise longest common
-    substring (difflib longest-matching-block oracle), with the pair set
-    unchanged from the default guaranteed-lower-bound mode."""
-    import random
-    from difflib import SequenceMatcher
-
-    from jira_duplicate_detection_turkcell__spark.operators import suffix
-
-    rng = random.Random(7)
-
-    def blob(n):
-        return "".join(rng.choice("abcdefgh ") for _ in range(n))
-
-    r1 = blob(100)  # shared by docs 0,1,2 (3-doc group: run-splitting stress)
-    r2 = blob(55)  # shared by docs 1,3
-    texts = {
-        "d0": blob(80) + r1 + blob(60),
-        "d1": blob(30) + r1 + blob(40) + r2 + blob(20),
-        "d2": r1 + blob(90),
-        "d3": blob(70) + r2 + blob(50),
-        "d4": blob(200),  # no planted runs
-    }
-    docs = spark.createDataFrame(list(texts.items()), "url string, text string")
-
-    default = {
-        (r["key_l"], r["key_r"]): r["span_len"]
-        for r in suffix.substring_edges(docs, "text", "url", min_len=48).collect()
-    }
-    exact = {
-        (r["key_l"], r["key_r"]): r["span_len"]
-        for r in suffix.substring_edges(
-            docs, "text", "url", min_len=48, exact_lcs=True
-        ).collect()
-    }
-    assert set(exact) == set(default)
-    assert {("d0", "d1"), ("d0", "d2"), ("d1", "d2"), ("d1", "d3")} <= set(exact)
-    for (ka, kb), span in exact.items():
-        m = SequenceMatcher(
-            None, texts[ka], texts[kb], autojunk=False
-        ).find_longest_match(0, len(texts[ka]), 0, len(texts[kb]))
-        assert span == m.size, (ka, kb)
-        assert default[(ka, kb)] <= span  # lower bound never exceeds truth
-
-
 def test_substring_oversized_component_certificate(spark):
     # force the 3-doc shared-run component over max_group_docs: the
     # oversized branch emits a spanning CERTIFICATE — every emitted edge is
-    # a TRUE substring pair (span_len ≥ min_len lower bound), and its
-    # connected components equal the full pair graph's, at O(n) edges.
+    # a TRUE substring pair, and its connected components equal the full
+    # pair graph's, at O(n) edges.
     # (A boilerplate near-clique's true pair set is Ω(n²); the certificate
     # is the scalable contract — full pairs stay for small components.)
     from jira_duplicate_detection_turkcell__spark.operators import suffix
@@ -180,9 +135,8 @@ def test_substring_oversized_component_certificate(spark):
     truth = {("a", "b"), ("a", "c"), ("b", "c")}
     docs = spark.createDataFrame(rows, "url string, text string")
     edges = suffix.substring_edges(docs, "text", "url", min_len=48, max_group_docs=2)
-    got = {(r["key_l"], r["key_r"]): r["span_len"] for r in edges.collect()}
-    assert set(got) <= truth  # certificate edges are true pairs only
-    assert all(v >= 48 for v in got.values())
+    got = {(r["key_l"], r["key_r"]) for r in edges.collect()}
+    assert got <= truth  # certificate edges are true pairs only
     # spanning: the certificate connects exactly the true component {a,b,c}
     parent = {k: k for k in "abcd"}
 
@@ -418,8 +372,8 @@ def test_substring_short_docs_emit_no_edges(spark):
     edges in EVERY mode — small-group SA, forced certificate branch, and
     sampled nomination. (char_shingles' whole-text fallback used to hand
     short docs a fake min_len-gram fingerprint; a big-enough group of
-    identical stubs then hit the certificate branch, which stamped
-    span_len = min_len on runs that cannot exist.)"""
+    identical stubs then hit the certificate branch, which emitted edges
+    for runs that cannot exist.)"""
     from jira_duplicate_detection_turkcell__spark.operators import suffix
 
     stub = "tiny boilerplate stub page"  # 26 chars < min_len=48
@@ -435,6 +389,7 @@ def test_substring_short_docs_emit_no_edges(spark):
         {"sample": 4, "max_group_docs": 2},
     ):
         edges = suffix.substring_edges(docs, "text", "url", min_len=48, **kwargs)
+        assert edges.columns == ["key_l", "key_r"], kwargs
         got = {(r["key_l"], r["key_r"]) for r in edges.collect()}
         assert got == {("la", "lb")}, (kwargs, got)
 

@@ -123,7 +123,7 @@ def test_html_roundtrip():
 def test_spark_udf_matches_local(spark, oracle):
     rows = [(f"u{i}",) + (s,) for i, s in enumerate(ADVERSARIAL)]
     df = spark.createDataFrame(rows, "url string, body string")
-    _, clean_desc_udf, _ = ex.register_udfs()
+    clean_desc_udf = ex.clean_description_udf()
     out = {r["url"]: r["t"] for r in df.select("url", clean_desc_udf("body").alias("t")).collect()}
     for i, s in enumerate(ADVERSARIAL):
         assert out[f"u{i}"] == oracle.clean_description(s), repr(s)

@@ -84,6 +84,18 @@ def test_ngram_jaccard_salted_posting_identical_to_uncapped(spark):
     assert run(4) == uncapped
 
 
+def test_ngram_jaccard_pairs_leaves_no_cache_entry(spark):
+    """A bare call materializes its gram table without registering a cache
+    entry, so nothing stays pinned for the session's lifetime."""
+    docs = spark.createDataFrame(
+        [(i, f"shared words here and doc {i % 3} tail") for i in range(12)],
+        "doc_id long, text string",
+    )
+    spark.catalog.clearCache()
+    assert jaccard.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 1, 2).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_knn_topk_vs_numpy(emb):
     rows = emb.collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}

@@ -138,19 +138,6 @@ def test_incremental_append_equals_full_rerun(spark, cfg):
     assert inc_assign == full_assign
 
 
-def test_incremental_edges_alone_still_rejects_substring_kind(spark):
-    # incremental_edges maintains only the signature kinds; calling it
-    # directly under enable_substring must stay loud (apply_append is the
-    # full-config API — it passes substring_handled=True and unions the
-    # substring edges from incremental_substring_edges)
-    pdf = synth.generate_pages_pdf(16, seed=42)
-    cfg = P.DedupConfig(enable_substring=True)
-    base = P.run_dedup(spark, spark.createDataFrame(pdf.iloc[:8]), P.DedupConfig())
-    new_signed = incremental.sign_new_batch(spark.createDataFrame(pdf.iloc[8:]), cfg)
-    with pytest.raises(ValueError, match="substring"):
-        incremental.incremental_edges(base["signatures"], new_signed, cfg)
-
-
 def test_incremental_substring_certificate_clusters_equal(spark):
     """Oversized components (spanning-certificate branch) under append.
 
@@ -178,6 +165,7 @@ def test_incremental_substring_certificate_clusters_equal(spark):
         cfg,
         existing_docs=base["docs"],
     )
+    assert upd["new_edges"].columns == ["key_l", "key_r"]
     full_assign = {r["url"]: r["cluster_id"] for r in full["clusters"].collect()}
     inc_assign = {r["url"]: r["cluster_id"] for r in upd["clusters"].collect()}
     # same partition of urls into clusters (ids are representative-based and
