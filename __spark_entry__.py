@@ -221,8 +221,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lpad(F.col("doc_id").cast("string"), 8, "0").alias("url"), "text"
         )
         # max_group_docs effectively unbounded: the DuckDB oracle enumerates
-        # EVERY sharing pair, so this query must run the full per-group SA
-        # verification at any component size. The production default (256)
+        # EVERY sharing pair, so this query must verify every group by its
+        # L-window classes at any component size. The production default (256)
         # degrades oversized boilerplate components to spanning-certificate
         # star edges — correct for CLUSTERING (same connected components)
         # but deliberately NOT the full pair enumeration this oracle checks.

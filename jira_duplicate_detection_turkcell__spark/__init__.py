@@ -3,7 +3,7 @@
 A from-scratch distributed re-expression of the capabilities of the reference
 duplicate-detection system (``esraacevik/Jira_Duplicate_Detection_Turkcell_``,
 surveyed in SURVEY.md): deterministic text extraction (byte-identical to the
-reference cleaner per url), MinHash+LSH / SimHash / suffix-array-substring
+reference cleaner per url), MinHash+LSH / SimHash / exact-substring
 candidate generation, exact pair verification, and distributed
 connected-components clustering — all expressed as PySpark DataFrame plans
 with vectorized pandas/Arrow UDFs only where the JVM built-ins genuinely

@@ -1,24 +1,27 @@
-"""Exact substring dedup — the C4 path (suffix array + fingerprint join).
+"""Exact substring dedup — the C4 path (fingerprint grouping + exact
+per-group L-window classes).
 
 Capability replaced: the reference's substring-semantics duplicate deletion
 (`str.contains(old_summary)`, api_server.py:800-813) and boilerplate
 detection. Two cooperating mechanisms:
 
-1. **Mod-sampled fingerprint join (the scale path).** Every L-char shingle
-   hash with ``hash % sample == 0`` is a fingerprint (deterministic 1/sample
-   sampling of the shingle stream — any shared substring of length
-   ≥ L + sample·E[gap] shares a fingerprint w.h.p.; with sample=1 recall is
-   exact for shared substrings ≥ L). Docs are joined on fingerprints —
-   JVM-side end to end, same hot-bucket capping as LSH.
+1. **Fingerprint postings (nomination).** By default (``sample <= 1``)
+   each doc's postings are winnowed rolling-hash fingerprints
+   (operators/winnow.py): any two docs sharing a run of ≥ L chars share a
+   posting value, so recall is exact. Docs are grouped by the connected
+   components of per-fingerprint star edges, JVM-side end to end. The
+   opt-in sampled mode (``sample > 1``) instead keeps the L-char shingle
+   hashes with ``hash % sample == 0`` — any shared substring of length
+   ≥ L + sample·E[gap] shares one w.h.p. — and restricts the output to
+   the pairs its salted fingerprint join nominates.
 
-2. **Per-partition suffix array (the exact verifier).** Inside
-   ``applyInPandas`` over fingerprint-bucketed groups, a numpy prefix-doubling
-   suffix array + Kasai LCP over the concatenated member texts finds the
-   maximal runs of adjacent LCP ≥ L; every pair of documents with suffixes
-   in one run becomes a verified (key_l, key_r) edge. Exactness is scoped to
-   within a bucket-group — the fingerprint join is what brings substring-
-   sharing docs into the same group across partitions (SURVEY.md §7.5
-   boundary contract).
+2. **Per-group L-window classes (the exact verifier).** Inside
+   ``applyInPandas``, each group's texts get one exact dense id per
+   L-length window by numpy prefix doubling (``_group_pairs``); every pair
+   of docs owning a window of one class becomes a verified (key_l, key_r)
+   edge. Exactness is scoped to within a group — the fingerprint grouping
+   is what brings substring-sharing docs into the same group across
+   partitions (SURVEY.md §7.5 boundary contract).
 """
 
 from __future__ import annotations
@@ -128,74 +131,22 @@ def fingerprint_candidate_pairs(
 
 
 # --------------------------------------------------------------------------
-# numpy suffix array (prefix doubling) + Kasai LCP
+# exact L-window classes (numpy prefix doubling)
 # --------------------------------------------------------------------------
 
-def suffix_array(codes: np.ndarray) -> np.ndarray:
-    """Suffix array of an int sequence via prefix doubling (O(n log² n))."""
-    n = codes.size
-    rank = np.unique(codes, return_inverse=True)[1].astype(np.int64)
-    sa = np.argsort(rank, kind="stable")
-    k = 1
-    while k < n:
-        second = np.full(n, -1, dtype=np.int64)
-        second[: n - k] = rank[k:]
-        order = np.lexsort((second, rank))
-        pair = np.stack([rank[order], second[order]], axis=1)
-        new_rank = np.empty(n, dtype=np.int64)
-        changed = np.any(pair[1:] != pair[:-1], axis=1)
-        new_rank[order] = np.concatenate(([0], np.cumsum(changed)))
-        sa, rank = order, new_rank
-        if rank[sa[-1]] == n - 1:
-            break
-        k <<= 1
-    return sa
+def _group_pairs(pdf: pd.DataFrame, min_len: int) -> pd.DataFrame:
+    """Exact shared-substring pairs within one group of docs: every pair of
+    distinct urls whose texts share a run of ≥ ``min_len`` chars, i.e. share
+    an L-window (L = ``min_len``).
 
-
-def lcp_array(codes: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """Kasai LCP: lcp[i] = LCP(suffix sa[i], suffix sa[i+1]).
-
-    Kasai's h-decrement walk is inherently sequential, so the loop stays in
-    Python — but over plain lists, not numpy arrays: scalar indexing on
-    ndarrays boxes a numpy scalar per access (~10× a list index), and this
-    loop is the per-group verification's hot spot on large boilerplate
-    groups (total work is O(n) amortized; every h increment is matched by
-    at most one decrement)."""
-    n = codes.size
-    rank = np.empty(n, dtype=np.int64)
-    rank[sa] = np.arange(n)
-    lcp = [0] * max(n - 1, 0)
-    codes_l = codes.tolist()
-    sa_l = sa.tolist()
-    rank_l = rank.tolist()
-    h = 0
-    for i in range(n):
-        r = rank_l[i]
-        if r < n - 1:
-            j = sa_l[r + 1]
-            while i + h < n and j + h < n and codes_l[i + h] == codes_l[j + h]:
-                h += 1
-            lcp[r] = h
-            if h:
-                h -= 1
-        else:
-            h = 0
-    return np.asarray(lcp, dtype=np.int64)
-
-
-def _group_spans(pdf: pd.DataFrame, min_len: int) -> pd.DataFrame:
-    """Exact shared-substring pairs within one group of docs.
-
-    Concatenate member texts with unique negative separators, build the
-    suffix array + Kasai LCP, and scan the *maximal runs* of adjacent
-    LCP ≥ min_len. All suffixes of one run share a prefix of length
-    ≥ min_len, so every pair of distinct docs appearing in the run
-    shares a substring that long — and conversely, any two docs sharing an
-    L-gram have their suffixes contiguous in SA order, i.e. land in one
-    run. Emitting all distinct-owner pairs per run is therefore *exactly*
-    the docs-sharing-an-L-gram relation, for any number of docs per group
-    (pairwise adjacency alone would miss pairs separated by a third doc's
-    suffixes inside the run).
+    Prefix doubling over the concatenated code points gives every position
+    a dense, exact id for its L-window: the ids at width w and the id of
+    the window ``step ≤ w`` positions later identify the window of width
+    w + step, via one ``np.unique`` over the pair (⌈log₂ L⌉ rounds, no
+    hashing). Only windows that lie inside one text are kept, so the
+    concatenation needs no separators. Each class with ≥ 2 owners emits
+    all its owner pairs. Owners are url ids, so duplicate url rows share
+    one owner and emit no self-edge.
     """
     # object dtype for the key columns: the group key type follows the
     # caller's key column (string urls, long doc_ids, …) — Arrow casts the
@@ -206,50 +157,66 @@ def _group_spans(pdf: pd.DataFrame, min_len: int) -> pd.DataFrame:
             "key_r": pd.Series(dtype=object),
         }
     )
-    keys = pdf["url"].tolist()
     texts = pdf["text"].tolist()
-    parts, owners = [], []
-    for idx, t in enumerate(texts):
-        codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-        parts.append(codes)
-        parts.append(np.array([-(idx + 1)], dtype=np.int64))  # unique separator
-        owners.append(np.full(codes.size + 1, idx, dtype=np.int64))
-    if not parts:
+    lengths = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    if not (lengths >= min_len).any():  # no window fits (or no text at all)
         return empty
-    codes = np.concatenate(parts)
-    owner = np.concatenate(owners)
-    sa = suffix_array(codes)
-    lcp = lcp_array(codes, sa)
-    if lcp.size == 0:
+    # url ids in key order, so owner a < owner b ⇔ key_a < key_b
+    owner_of_doc, urls = pd.factorize(pdf["url"], sort=True)
+    rank = np.frombuffer(
+        "".join(texts).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+    n = rank.size
+
+    width = 1
+    while width < min_len:
+        step = min(width, min_len - width)
+        nxt = np.zeros(n, dtype=np.int64)  # 0: the window runs off the end
+        nxt[: n - step] = rank[step:] + 1
+        key = rank * (int(rank.max()) + 2) + nxt
+        ids, rank = np.unique(key, return_inverse=True)
+        width += step
+        if ids.size == n:  # no window of this width repeats
+            return empty
+
+    # keep the windows that end inside their own text
+    doc_of_pos = np.repeat(np.arange(lengths.size), lengths)
+    inside = np.arange(n) + min_len <= np.cumsum(lengths)[doc_of_pos]
+    n_own = urls.size
+    owner = owner_of_doc.astype(np.int64)[doc_of_pos[inside]]
+    # classes renumbered by first occurrence, so the windows along one
+    # shared run become consecutive classes with equal owner lists
+    _, first, cls = np.unique(rank[inside], return_index=True, return_inverse=True)
+    by_first = np.empty(first.size, dtype=np.int64)
+    by_first[np.argsort(first)] = np.arange(first.size)
+    rows = np.unique(by_first[cls] * n_own + owner)  # distinct (class, owner)
+    cls, owner = rows // n_own, rows % n_own
+    sizes = np.diff(np.flatnonzero(np.diff(cls, prepend=-1)), append=rows.size)
+    shared = np.repeat(sizes >= 2, sizes)
+    owner, sizes = owner[shared], sizes[sizes >= 2]
+    if sizes.size == 0:
         return empty
 
-    # insertion-ordered set of pairs: a pair can recur across runs, and the
-    # output row order stays deterministic
-    rows: dict[tuple[str, str], None] = {}
-    mask = lcp >= min_len
-    # maximal runs of consecutive True in mask: lcp[i..j] all ≥ min_len
-    # covers suffix positions sa[i..j+1]
-    edges_idx = np.flatnonzero(np.diff(np.concatenate(([0], mask.view(np.int8), [0]))))
-    for s, e in edges_idx.reshape(-1, 2):  # run over lcp[s:e]
-        os_ = owner[sa[s : e + 1]]
-        uniq = np.unique(os_)
-        if uniq.size < 2:
-            continue
-        for ai in range(uniq.size):
-            for bi in range(ai + 1, uniq.size):
-                a, b = uniq[ai], uniq[bi]
-                if keys[a] == keys[b]:
-                    # the same url appearing twice in one group (duplicate
-                    # input rows) must not emit a self-edge — the engine-wide
-                    # edge contract is distinct pairs with key_l < key_r
-                    continue
-                ka, kb = (
-                    (keys[a], keys[b]) if keys[a] < keys[b] else (keys[b], keys[a])
-                )
-                rows[(ka, kb)] = None
-    if not rows:
-        return empty
-    return pd.DataFrame(list(rows), columns=["key_l", "key_r"])
+    # drop a class whose owner list equals the previous class's: it would
+    # only emit the same pairs again
+    cls = np.repeat(np.arange(sizes.size), sizes)
+    idx = np.arange(owner.size)
+    same_size = np.concatenate(([False], sizes[1:] == sizes[:-1]))
+    prev = np.where(same_size[cls], idx - sizes[cls], idx)
+    differs = np.bincount(cls, weights=owner != owner[prev], minlength=sizes.size)
+    repeat = same_size & (differs == 0)
+    owner, sizes = owner[~repeat[cls]], sizes[~repeat]
+
+    # every owner pairs with the owners after it in its class
+    offset = np.arange(owner.size) - np.repeat(np.cumsum(sizes) - sizes, sizes)
+    later = np.repeat(sizes, sizes) - 1 - offset
+    left = np.repeat(np.arange(owner.size), later)
+    right = left + 1 + np.arange(left.size) - np.repeat(np.cumsum(later) - later, later)
+    pairs = np.unique(owner[left] * n_own + owner[right])
+    keys = np.asarray(urls, dtype=object)
+    return pd.DataFrame(
+        {"key_l": keys[pairs // n_own], "key_r": keys[pairs % n_own]}
+    )
 
 
 def _star_edges(fps: "DataFrame", key_col: str) -> "DataFrame":
@@ -296,8 +263,8 @@ def substring_edges(
 
     Plan: the fingerprint table nominates candidate GROUPS (connected
     components of the share-a-fingerprint relation), each doc's text is
-    shipped ONCE into its group, and one suffix array per group verifies
-    every pair in it (`_group_spans` run-scan — exact for the whole group).
+    shipped ONCE into its group, and the group's L-window classes verify
+    every pair in it (`_group_pairs` — exact for the whole group).
     Components larger than ``max_group_docs`` (boilerplate near-cliques,
     whose true pair set is Ω(n²) by construction) emit a spanning
     CERTIFICATE of true edges instead — per-fingerprint star edges, O(n)
@@ -309,7 +276,7 @@ def substring_edges(
     connected components are identical to the candidate pair graph's (two
     docs sharing a fingerprint are both adjacent to that fingerprint's
     representative) at O(Σ postings) rows instead of O(Σ postings²). With
-    ``sample == 1`` (default) the group SA's output IS the exact
+    ``sample == 1`` (default) the group verifier's output IS the exact
     docs-sharing-an-L-gram relation — any two docs sharing an L-char run
     share that L-gram's fingerprint and land in one group — so no
     candidate-pair restriction is needed. With ``sample > 1`` fingerprints
@@ -320,7 +287,7 @@ def substring_edges(
     Note the grouping component labels must NEVER seed a downstream
     clustering as pre-merged labels: with winnowed nomination (k =
     min_len − w + 1 < min_len) a group can contain docs sharing only a
-    k-byte run — docs the SA then correctly REJECTS as pairs — so the
+    k-byte run — docs the verifier then correctly REJECTS as pairs — so the
     grouping partition is strictly coarser than the verified-edge
     components. Only the returned verified edges carry clustering
     semantics. (The round-3 latency here was instead removed structurally:
@@ -343,7 +310,7 @@ def substring_edges(
         # rows and a 395 s edge phase; winnowing cuts posting volume ~8×
         # with zero recall change (grouping may only get COARSER — docs
         # sharing a ≥k-byte-but-<min_len run can land in one group — and
-        # the per-group suffix array rejects exactly those, so the output
+        # the per-group verifier rejects exactly those, so the output
         # pair set is unchanged; pinned by the brute-force equality tests).
         postings = substring_postings(slim, text_col, key_col, min_len, sample)
 
@@ -383,8 +350,9 @@ def _grouped_verify(
 
     Shared tail of the batch (`substring_edges`) and incremental
     (`incremental_substring_edges`) paths: connected-components-group the
-    nomination edges, run one suffix array per small group (each member's
-    text shipped once), and emit spanning-certificate star edges for
+    nomination edges, verify each small group by its exact L-window
+    classes (``_group_pairs``; each member's text shipped once), and emit
+    spanning-certificate star edges for
     oversized near-clique components. ``pairs`` (sampled mode only)
     restricts small-group output to nominated pairs. ``temps`` collects the persists this function pins, for callers that
     materialize the result internally and can release them.
@@ -406,7 +374,7 @@ def _grouped_verify(
         # this persist once their result is checkpointed
         temps.append(comp)
 
-    # ---- small components: one SA per group, each text shipped once
+    # ---- small components: L-window classes per group, each text shipped once
     small = (
         comp.filter(F.col("_gsz") <= max_group_docs)
         .join(slim, key_col)
@@ -414,7 +382,7 @@ def _grouped_verify(
     )
 
     def verify_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _group_spans(pdf, min_len)
+        return _group_pairs(pdf, min_len)
 
     # schema follows the caller's key type (string urls, long doc_ids, …) —
     # a hard-coded string schema crashed long-keyed callers at Arrow time
@@ -423,7 +391,7 @@ def _grouped_verify(
         verify_group, f"key_l {key_dt}, key_r {key_dt}"
     )
     if pairs is not None:
-        # sampled fingerprints: the group SA emits every pair sharing an
+        # sampled fingerprints: the group verifier emits every pair sharing an
         # L-gram, including pairs the sampled join never nominated — keep
         # the candidate-pair contract by restricting to nominated pairs
         small_edges = small_edges.join(pairs, ["key_l", "key_r"], "left_semi")
@@ -443,7 +411,7 @@ def _grouped_verify(
     # trust already placed in every hashed-shingle comparison here), so
     # every emitted edge is a true substring edge, and every true pair shares ≥ 1 such fingerprint, making the star
     # graph's connected components EQUAL to the true pair graph's. O(n)
-    # edges, O(postings) work. Small components keep full SA-verified
+    # edges, O(postings) work. Small components keep full exactly verified
     # pair output; only oversized ones degrade to the certificate, which
     # is the only scalable contract for them.
     big_keys = comp.filter(F.col("_gsz") > max_group_docs).select(
@@ -496,12 +464,12 @@ def incremental_substring_edges(
     and (b) every edge touching a new doc is witnessed by a fingerprint
     value present in the NEW batch's postings. Restricting the nomination
     graph to postings whose fp appears in the new batch (one semi-join)
-    therefore loses nothing; the per-group suffix array then verifies
+    therefore loses nothing; the per-group L-window classes then verify
     exactly as in batch. Grouping uses the same O(postings) star-edge
     construction as the batch path rather than a pairwise new×all bucket
     join — pairwise nomination on a boilerplate fingerprint shared by the
     batch AND 10⁵ corpus docs is the Ω(n·m) blowup the batch path already
-    removed; the star/CC/SA route caps it at O(touched postings). In
+    removed; the star/CC/verify route caps it at O(touched postings). In
     sampled mode (no grouping-exactness guarantee) nomination IS pairwise
     by contract, and runs through ``salted_bipartite_pairs`` — both sides
     salted, bounded cells, zero drops.
@@ -509,7 +477,7 @@ def incremental_substring_edges(
     Oversized touched components emit the same spanning-certificate star
     edges as batch (true edges). All exact-
     mode output is then restricted to new-touching pairs: old×old rows —
-    SA re-derivations or certificate edges alike — are true pairs, hence
+    group re-derivations or certificate edges alike — are true pairs, hence
     already connected in the existing edge state (every certificate edge
     joins two docs sharing a min_len-gram, a pair the PRIOR run's output
     connects by its own CC-equivalence contract), so dropping them changes
@@ -550,11 +518,11 @@ def incremental_substring_edges(
         grouping_edges, slim, key_col, text_col, min_len, sample,
         max_group_docs, pairs, temps=temps,
     )
-    # drop old×old rows (exact-mode SA re-derivations and certificate star
+    # drop old×old rows (exact-mode group re-derivations and certificate star
     # edges in either mode) — complete/connected in the existing state per
     # the docstring argument. One linear plan (two left joins + flag
     # filter), NOT two semi-join branches: a branched plan re-executes the
-    # per-group suffix-array verification once per branch.
+    # per-group verification once per branch.
     nk = new_slim.select(F.col(key_col))
     flag_l = nk.select(F.col(key_col).alias("key_l"), F.lit(True).alias("_nl"))
     flag_r = nk.select(F.col(key_col).alias("key_r"), F.lit(True).alias("_nr"))

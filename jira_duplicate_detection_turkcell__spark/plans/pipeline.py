@@ -41,13 +41,14 @@ class DedupConfig:
     # simhash
     enable_simhash: bool = True
     hamming_max: int = 3
-    # substring / suffix-array
+    # substring (fingerprint grouping + exact L-window classes)
     enable_substring: bool = False
     substr_min_len: int = 48
     substr_sample: int = 1
     substr_bucket_cap: int = 200
     # components larger than this degrade to spanning-certificate star
-    # edges instead of O(n²) SA pairs (operators/suffix.py oversized branch)
+    # edges instead of their O(n²) verified pairs (operators/suffix.py
+    # oversized branch)
     substr_max_group_docs: int = 256
     # seeds
     minhash_seed: int = 7

@@ -26,7 +26,7 @@ substring kind on (round 3 rejected it at the API boundary): the substring
 path's state is the winnowed fingerprint postings table — committed as the
 ``substr_postings`` stage by checkpointed runs — and an append winnows only
 the new docs, semi-joins the state on the new fingerprint values, and
-group-SA-verifies exactly as the batch path does
+verifies each group exactly as the batch path does
 (operators/suffix.incremental_substring_edges).
 
 Hot buckets on this path are SALTED via the bipartite generator

@@ -35,7 +35,7 @@ AUDIT = {
     "minhash_lsh_pairs": [],
     "substring_pairs": [
         ("Window", "star edges: one window-min over fp, no reps re-join"),
-        ("FlatMapGroupsInPandas", "per-group suffix-array verification"),
+        ("FlatMapGroupsInPandas", "per-group L-window verification"),
     ],
     "token_stats": [("codegen id :", "expressions must stay in codegen")],
     "feature_extract": [("codegen id :", "regex families must stay in codegen")],

@@ -98,9 +98,9 @@ def test_substring_edges_match_bruteforce(spark, docs, texts):
 
 
 def test_substring_group_verification_emits_transitive_pairs(spark):
-    # three docs share one 48+ char run → one candidate component; the group
-    # SA must emit ALL THREE pairs, including (a, c) whose suffixes may be
-    # separated by b's inside the SA run (pairwise adjacency would miss it)
+    # three docs share one 48+ char run → one candidate component; the
+    # group verifier must emit ALL THREE pairs from the one L-window class
+    # the run's windows fall in, not only pairs of neighbouring owners
     from jira_duplicate_detection_turkcell__spark.operators import suffix
 
     shared = "the quick brown fox jumps over the lazy dog again and again"
@@ -358,7 +358,7 @@ def test_substring_sampled_mode_subset_and_long_run_recall(spark):
         ("c", "completely unrelated text with no long shared run at all here"),
     ]
     docs = spark.createDataFrame(rows, "url string, text string")
-    for mgd in (256, 1):  # small-group SA path AND oversized certificate path
+    for mgd in (256, 1):  # small-group verify path AND oversized certificate path
         edges = suffix.substring_edges(
             docs, "text", "url", min_len=48, sample=4, max_group_docs=mgd
         )
@@ -369,7 +369,7 @@ def test_substring_sampled_mode_subset_and_long_run_recall(spark):
 def test_substring_short_docs_emit_no_edges(spark):
     """Docs shorter than min_len cannot share a ≥ min_len-char run, so
     identical short docs (spam/boilerplate stubs) must emit ZERO substring
-    edges in EVERY mode — small-group SA, forced certificate branch, and
+    edges in EVERY mode — small-group verify, forced certificate branch, and
     sampled nomination. (char_shingles' whole-text fallback used to hand
     short docs a fake min_len-gram fingerprint; a big-enough group of
     identical stubs then hit the certificate branch, which emitted edges
@@ -383,7 +383,7 @@ def test_substring_short_docs_emit_no_edges(spark):
     rows += [("la", f"left {shared} one"), ("lb", f"right {shared} two")]
     docs = spark.createDataFrame(rows, "url string, text string")
     for kwargs in (
-        {},                             # default winnowed nomination, SA verify
+        {},                             # default winnowed nomination, group verify
         {"max_group_docs": 2},          # forces the certificate branch
         {"sample": 4},                  # mod-sampled nomination
         {"sample": 4, "max_group_docs": 2},

@@ -3,9 +3,9 @@
 These attack the invariants the whole substring path rests on, with
 randomized inputs rather than planted fixtures:
 
-* ``suffix_array``/``lcp_array`` against naive sorted-suffix construction;
-* ``_group_spans`` against a brute-force shared-L-gram oracle (pair set
-  exactness);
+* ``_group_pairs`` against a brute-force shared-L-gram oracle (pair set
+  exactness), at window lengths that take full and partial doubling steps
+  and with duplicate url rows in one group;
 * the winnowing guarantee: any two texts sharing a run of ≥ k + w − 1
   bytes share a selected fingerprint VALUE (the recall contract both the
   batch and incremental substring nominations depend on).
@@ -16,46 +16,39 @@ keeps hundreds of examples cheap.
 
 from __future__ import annotations
 
+import string
+
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from jira_duplicate_detection_turkcell__spark.operators.suffix import (
-    _group_spans,
-    lcp_array,
-    suffix_array,
-)
+from jira_duplicate_detection_turkcell__spark.operators.suffix import _group_pairs
 from jira_duplicate_detection_turkcell__spark.operators.winnow import winnow_kernel
 
-# small alphabets force dense repeat/overlap structure — the hard cases
-texts_strategy = st.lists(
-    st.text(alphabet="abc", min_size=0, max_size=40), min_size=1, max_size=6
+# small alphabets force dense repeat/overlap structure — the hard cases;
+# url ids repeat, so one group can hold duplicate url rows
+rows_strategy = st.lists(
+    st.tuples(st.integers(min_value=0, max_value=5), st.text(alphabet="abc", max_size=40)),
+    min_size=1,
+    max_size=6,
 )
+# the @examples at min_len=48 share 47 or 48 chars of RUN between two docs,
+# which pins the partial 32 → 48 doubling step
+RUN = (string.ascii_lowercase * 2)[:48]
 
 
-@settings(max_examples=150, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=60))
-def test_suffix_array_and_lcp_match_naive(codes_list):
-    codes = np.array(codes_list, dtype=np.int64)
-    sa = suffix_array(codes)
-    suffixes = sorted(range(len(codes_list)), key=lambda i: codes_list[i:])
-    assert list(sa) == suffixes
-    lcp = lcp_array(codes, sa)
-    for r in range(len(codes_list) - 1):
-        a, b = codes_list[sa[r] :], codes_list[sa[r + 1] :]
-        n = 0
-        while n < len(a) and n < len(b) and a[n] == b[n]:
-            n += 1
-        assert lcp[r] == n
-
-
-@settings(max_examples=100, deadline=None)
-@given(texts_strategy, st.integers(min_value=2, max_value=6))
-def test_group_spans_pair_set_is_exact_shared_lgram_relation(texts, min_len):
-    keys = [f"d{i}" for i in range(len(texts))]
+@settings(max_examples=200, deadline=None)
+@given(rows_strategy, st.integers(min_value=1, max_value=7))
+@example([(0, f"0{RUN[:47]}1"), (1, f"2{RUN[:47]}3")], 48)  # 47 shared: no pair
+@example([(0, f"0{RUN}1"), (1, f"2{RUN}3")], 48)  # 48 shared: a pair
+@example([(0, RUN), (0, RUN), (1, "x")], 48)  # duplicate url: no self-edge
+def test_group_pairs_is_exact_shared_lgram_relation(rows, min_len):
+    keys = [f"d{u}" for u, _ in rows]
+    texts = [t for _, t in rows]
     pdf = pd.DataFrame({"url": keys, "text": texts})
-    got = {(r.key_l, r.key_r) for r in _group_spans(pdf, min_len).itertuples()}
+    got = [(r.key_l, r.key_r) for r in _group_pairs(pdf, min_len).itertuples()]
+    assert len(got) == len(set(got))
     truth = set()
     for i in range(len(texts)):
         gi = {texts[i][p : p + min_len] for p in range(len(texts[i]) - min_len + 1)}
@@ -63,10 +56,9 @@ def test_group_spans_pair_set_is_exact_shared_lgram_relation(texts, min_len):
             gj = {
                 texts[j][p : p + min_len] for p in range(len(texts[j]) - min_len + 1)
             }
-            if gi & gj:
-                a, b = sorted((keys[i], keys[j]))
-                truth.add((a, b))
-    assert got == truth
+            if keys[i] != keys[j] and gi & gj:
+                truth.add(tuple(sorted((keys[i], keys[j]))))
+    assert set(got) == truth
 
 
 @settings(max_examples=80, deadline=None)
